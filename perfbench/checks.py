@@ -21,7 +21,7 @@ def precision_recall(got, expected) -> tuple:
 
 class UnionFind:
     """Plain union-find with path halving; the partition it builds is
-    the reference the canonicalizer's components are checked against."""
+    the reference the canonical entities are checked against."""
 
     def __init__(self):
         self.parent: dict = {}
@@ -44,23 +44,6 @@ class UnionFind:
         for x in list(self.parent):
             out.setdefault(self.find(x), set()).add(x)
         return out
-
-
-def partition_of(edges) -> set:
-    """The node partition of an edge list, as a set of frozensets."""
-    uf = UnionFind()
-    for a, b in edges:
-        uf.union(a, b)
-    return {frozenset(g) for g in uf.groups().values()}
-
-
-def same_partition(mapping: dict, edges) -> bool:
-    """Whether ``mapping`` (node -> component label) induces exactly the
-    partition the union-find builds from ``edges``."""
-    by_label: dict = {}
-    for node, label in mapping.items():
-        by_label.setdefault(label, set()).add(node)
-    return {frozenset(g) for g in by_label.values()} == partition_of(edges)
 
 
 def oracle_multiset():

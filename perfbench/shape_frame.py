@@ -1,6 +1,7 @@
 """``shape_frame``: frame, flatten and path leaves of
-``__spark_entry__.queries()`` over a small seeded TPC-H-like dataset.
-Each leaf is checked against its ``oracle_sql()`` twin on DuckDB.
+``__spark_entry__.queries()`` over a seeded TPC-H-like dataset with the
+row counts of the sf0.01 test tables.  Each leaf is checked against its
+``oracle_sql()`` twin on DuckDB.
 
 One timed operation is one pass over the leaves (closed loop, one
 client); each leaf is built and collected in turn.  The traced run
@@ -31,8 +32,8 @@ LEAVES = (
     "flatten_list_counts",
 )
 
-N_SUPPLIERS = 40
-N_ORDERS = 800
+# sf0.01's row counts (lineitem averages four lines an order: ~60k)
+N_SUPPLIERS, N_ORDERS = 100, 15000
 TABLES = ("region", "nation", "supplier", "orders", "lineitem")
 
 

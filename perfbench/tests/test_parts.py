@@ -2,7 +2,7 @@
 
 import json
 
-from checks import UnionFind, partition_of, precision_recall, same_partition
+from checks import UnionFind, precision_recall
 from eventlog import reduce_layers
 from harness import tail_percentile
 
@@ -48,9 +48,12 @@ def test_precision_recall_edges():
 # ------------------------------------------------------------ union-find
 
 def test_union_find_partition():
-    edges = [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f2"), ("f2", "a")]
-    assert partition_of(edges) == {frozenset("abc") | {"f", "f2"},
-                                   frozenset("de")}
+    uf = UnionFind()
+    for a, b in [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f2"),
+                 ("f2", "a")]:
+        uf.union(a, b)
+    assert {frozenset(g) for g in uf.groups().values()} == {
+        frozenset("abc") | {"f", "f2"}, frozenset("de")}
 
 
 def test_union_find_long_chain_and_duplicates():
@@ -60,16 +63,6 @@ def test_union_find_long_chain_and_duplicates():
         uf.union(i, i + 1)
     assert len(uf.groups()) == 1
     assert uf.find(5000) == 0
-
-
-def test_same_partition_ignores_labels_but_not_grouping():
-    edges = [("m1", "e1"), ("m2", "e1"), ("m3", "e2")]
-    good = {"m1": "X", "m2": "X", "e1": "X", "m3": "Y", "e2": "Y"}
-    assert same_partition(good, edges)
-    merged = dict(good, m3="X", e2="X")
-    assert not same_partition(merged, edges)
-    split = dict(good, m2="Z")
-    assert not same_partition(split, edges)
 
 
 # ------------------------------------------------------ event-log reducer

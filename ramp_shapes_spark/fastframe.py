@@ -57,8 +57,11 @@ def _leaf(engine, sid: ShapeID) -> Optional[Shape]:
     s = engine.catalog.get(sid)
     if not isinstance(s, (ResourceShape, LiteralShape)):
         return None
-    if isinstance(s, ResourceShape) and s.vocabulary is not None:
-        return None  # vocabulary misses need the error channel
+    if engine._track and isinstance(s, ResourceShape) and \
+            s.vocabulary is not None:
+        # every site here treats a miss as no match and no mismatch
+        # (_s_node_miss), but none emits its ERR_VOCABULARY row
+        return None
     if sid.key() in engine._collectors:
         return None  # captured by an outer computed-property/map context
     return s
@@ -271,6 +274,13 @@ def _len_guard(engine, col: str, what: str, key: str = "__ek") -> str:
     )
 
 
+def _drop_misses(engine, df: DataFrame, leaf: Shape, t: str) -> DataFrame:
+    """``df`` without the rows whose TERM column ``t`` misses ``leaf``'s
+    vocabulary: a miss is neither a set item nor a path candidate."""
+    miss = engine._s_node_miss(leaf, t)
+    return df if miss is None else df.where(f"NOT {miss}")
+
+
 def _edges(engine, pred: str, inv: bool) -> DataFrame:
     src, dst = ("o", "s") if inv else ("s", "o")
     t = engine.triples.where(F.col("p") == F.lit(pred))
@@ -318,19 +328,23 @@ def _scalar_base(engine, all_props,
     for i, (prop, plan) in enumerate(all_props):
         nmatch = None
         if plan[0] == "anyleaf":
-            # fail = every variant's check fails; matches are counted
-            # PER (triple, variant) — the general compiler emits one
-            # match row per matching variant, so a term matching two
-            # variants must count 2 (exactly-one then fails with 204)
-            checks = [engine._s_node_checks(leaf, "o")[0]
+            # fail = no variant matches (a vocabulary miss is no match
+            # of its variant); matches are counted PER (triple, variant)
+            # — the general compiler emits one match row per matching
+            # variant, so a term matching two variants must count 2
+            # (exactly-one then fails with 204)
+            checks = [engine._s_node_nomatch(leaf, "o")
                       for leaf in plan[1]]
             fail = "(" + " AND ".join(checks) + ")"
+            hit = f"NOT {fail}"
             nmatch = "(" + " + ".join(
                 f"IF(NOT {c}, 1, 0)" for c in checks) + ")"
         elif plan[0] == "gather" and not is_self_path(prop.path):
             if plan[1] not in ("plain", "optional"):
                 return None  # bounded sets need the array gather
             fail, _ = engine._s_node_checks(plan[3], "o")
+            # a vocabulary miss counts in neither __nm nor __nf
+            hit = f"NOT {engine._s_node_nomatch(plan[3], 'o')}"
         else:
             continue
         pc = f"p = {s_str(prop.path.predicate)}"
@@ -340,12 +354,12 @@ def _scalar_base(engine, all_props,
                 f"0) AS __nm{i}")
         else:
             agg_exprs.append(
-                f"count(CASE WHEN {pc} AND NOT {fail} THEN 1 END) "
+                f"count(CASE WHEN {pc} AND {hit} THEN 1 END) "
                 f"AS __nm{i}")
         agg_exprs.append(
             f"count(CASE WHEN {pc} AND ({fail}) THEN 1 END) AS __nf{i}")
         agg_exprs.append(
-            f"min(CASE WHEN {pc} AND NOT {fail} "
+            f"min(CASE WHEN {pc} AND {hit} "
             f"THEN struct(tid, o) END) AS __m1{i}")
         if prop.path.predicate not in preds:
             preds.append(prop.path.predicate)
@@ -364,7 +378,7 @@ def _scalar_base(engine, all_props,
         if plan[0] == "anyleaf":
             m1 = f"(__m1{i}).o"
             whens = " ".join(
-                f"WHEN NOT {engine._s_node_checks(leaf, m1)[0]} "
+                f"WHEN NOT {engine._s_node_nomatch(leaf, m1)} "
                 f"THEN {engine._s_node_value(leaf, m1)}"
                 for leaf in plan[1]
             )
@@ -378,9 +392,9 @@ def _scalar_base(engine, all_props,
             continue
         kind, wrapper, leaf = plan[1], plan[2], plan[3]
         if is_self_path(prop.path):
-            fail_f, _ = engine._s_node_checks(leaf, "focus")
-            ok = f"(NOT {fail_f})"
-            val = (f"CASE WHEN NOT {fail_f} "
+            nohit_f = engine._s_node_nomatch(leaf, "focus")
+            ok = f"(NOT {nohit_f})"
+            val = (f"CASE WHEN NOT {nohit_f} "
                    f"THEN {engine._s_node_value(leaf, 'focus')} END")
         else:
             m1 = f"(__m1{i}).o"
@@ -456,11 +470,11 @@ def _build_rel(engine, sid: ShapeID,
                             continue
                         # first matched object term (exactly-one ⇒
                         # unique)
-                        fail_x, _ = engine._s_node_checks(plan[3], "x.o")
+                        nohit_x = engine._s_node_nomatch(plan[3], "x.o")
                         objs = f"coalesce((__po{i}).objs, array())"
                         exprs.append(
                             f"(try_element_at(filter({objs}, "
-                            f"x -> NOT {fail_x}), 1)).o AS __capt{ci}")
+                            f"x -> NOT {nohit_x}), 1)).o AS __capt{ci}")
         rel = base.selectExpr(*exprs)
 
     # --- per-predicate joins for record/set/map-valued properties
@@ -525,6 +539,7 @@ def _build_rel(engine, sid: ShapeID,
             prel, inc_self = eval_path_universal(plan[1], engine.triples)
             item_t = "array<struct<__etid:bigint,__enk:string,__ev:string>>"
             if prel is not None:
+                prel = _drop_misses(engine, prel, leaf, "node")
                 fail_x, _ = engine._s_node_checks(leaf, "node")
                 vj = engine._s_node_value(leaf, "node")
                 agg = prel.selectExpr(
@@ -548,10 +563,15 @@ def _build_rel(engine, sid: ShapeID,
                     f"CAST(array() AS {item_t}) AS __pi{i}")
             items = f"coalesce(__pi{i}, CAST(array() AS {item_t}))"
             if inc_self:
-                fail_f, _ = engine._s_node_checks(leaf, "focus")
+                nohit_f = engine._s_node_nomatch(leaf, "focus")
+                miss_f = engine._s_node_miss(leaf, "focus")
                 vf = engine._s_node_value(leaf, "focus")
-                self_ok = f"(NOT ({fail_f}))"
+                self_ok = f"(NOT ({nohit_f}))"
                 dup = f"exists({items}, x -> x.__enk = skey)"
+                # a self that misses the vocabulary is no item at all
+                self_skip = f"{self_ok} AND ({dup})"
+                if miss_f is not None:
+                    self_skip = f"({self_skip}) OR {miss_f}"
                 self_item = (f"named_struct('__etid', ord, '__enk', skey, "
                              f"'__ev', ({vf}))")
                 merged = (
@@ -564,8 +584,7 @@ def _build_rel(engine, sid: ShapeID,
                     f"ELSE {items} END")
                 # a failing self overcounts __nt on a dup cycle, but the
                 # set already fails (nt > nm) either way
-                nt = (f"(coalesce(__pt{i}, 0) + "
-                      f"IF({self_ok} AND ({dup}), 0, 1))")
+                nt = f"(coalesce(__pt{i}, 0) + IF({self_skip}, 0, 1))"
                 nm = (f"(coalesce(__pm{i}, 0) + "
                       f"IF({self_ok} AND NOT ({dup}), 1, 0))")
             else:
@@ -607,6 +626,7 @@ def _build_rel(engine, sid: ShapeID,
             leaf = plan[3]
             prel, inc_self = eval_path_universal(plan[1], engine.triples)
             if prel is not None:
+                prel = _drop_misses(engine, prel, leaf, "node")
                 fail_x, _ = engine._s_node_checks(leaf, "node")
                 vj = engine._s_node_value(leaf, "node")
                 agg = prel.selectExpr(
@@ -633,11 +653,14 @@ def _build_rel(engine, sid: ShapeID,
             pt = f"coalesce(__pt{i}, 0)"
             pm = f"coalesce(__pm{i}, 0)"
             if inc_self:
-                fail_f, _ = engine._s_node_checks(leaf, "focus")
+                nohit_f = engine._s_node_nomatch(leaf, "focus")
+                miss_f = engine._s_node_miss(leaf, "focus")
                 vf = engine._s_node_value(leaf, "focus")
-                self_ok = f"(NOT ({fail_f}))"
+                self_ok = f"(NOT ({nohit_f}))"
                 dup = f"(coalesce(__sd{i}, 0) = 1)"
-                nt = f"({pt} + IF({dup}, 0, 1))"
+                # a self that misses the vocabulary is no candidate
+                self_skip = dup if miss_f is None else f"{dup} OR {miss_f}"
+                nt = f"({pt} + IF({self_skip}, 0, 1))"
                 nm = f"({pm} + IF({self_ok} AND NOT {dup}, 1, 0))"
                 val1 = (f"CASE WHEN {pm} >= 1 THEN (__p1{i}).__ev "
                         f"WHEN {self_ok} THEN ({vf}) END")
@@ -703,7 +726,7 @@ def _build_rel(engine, sid: ShapeID,
                 leaf = plan[4]
                 fail_x, _ = engine._s_node_checks(leaf, "__eo")
                 vj = engine._s_node_value(leaf, "__eo")
-                ee = e.selectExpr(
+                ee = _drop_misses(engine, e, leaf, "__eo").selectExpr(
                     "__ek", "__etid",
                     f"CASE WHEN NOT ({fail_x}) THEN ({vj}) END AS __ev")
             else:

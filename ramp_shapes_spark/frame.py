@@ -525,11 +525,47 @@ class FrameEngine:
         ) + " END"
         return fail, code
 
+    @staticmethod
+    def _s_vocab_key(shape, t: str) -> Optional[str]:
+        """Vocabulary key of TERM expr ``t`` (value-mapping.ts
+        fromVocabulary; the first key wins for a term listed twice) —
+        NULL for a term outside the vocabulary; None when ``shape`` has
+        no vocabulary."""
+        if not isinstance(shape, ResourceShape) or shape.vocabulary is None:
+            return None
+        keys: Dict[str, str] = {}
+        for key, term in shape.vocabulary:
+            keys.setdefault(term.key(), key)
+        entries = ", ".join(f"{s_str(tk)}, {s_str(k)}"
+                            for tk, k in keys.items())
+        return f"try_element_at(map({entries}), {s_term_key(t)})"
+
+    @classmethod
+    def _s_node_miss(cls, shape, t: str) -> Optional[str]:
+        """Vocabulary miss over TERM expr ``t``: the term passes
+        matchesTerm but maps to no vocabulary key.  A miss is neither a
+        match nor a mismatch — it only feeds ERR_VOCABULARY to the error
+        channel.  None when ``shape`` has no vocabulary."""
+        key = cls._s_vocab_key(shape, t)
+        if key is None:
+            return None
+        fail, _ = cls._s_node_checks(shape, t)
+        return f"(NOT {fail} AND {key} IS NULL)"
+
+    @classmethod
+    def _s_node_nomatch(cls, shape, t: str) -> str:
+        """Complement of a match over TERM expr ``t``: a mismatch
+        (``_s_node_checks``) or a vocabulary miss."""
+        fail, _ = cls._s_node_checks(shape, t)
+        key = cls._s_vocab_key(shape, t)
+        return fail if key is None else f"({fail} OR {key} IS NULL)"
+
     def _compile_node(self, shape, cand: DataFrame, groups: DataFrame) -> Result:
         f = "focus"
         fail, code = self._s_node_checks(shape, f)
+        miss = self._s_node_miss(shape, f)
 
-        matched = cand.where(f"NOT {fail}")
+        matched = cand.where(f"NOT {self._s_node_nomatch(shape, f)}")
 
         # mismatch diagnostics (matchesTerm's first failing check);
         # without error tracking the mismatch ROWS remain (they decide
@@ -550,37 +586,31 @@ class FrameEngine:
                 "CAST(NULL AS STRING) AS stack",
             )
 
-        self._capture_refs(shape, matched)
+        if miss is not None and not self._suppress_errors and self._track:
+            frame = self._s_frame_json(shape, "edge", f)
+            self._emit(cand.where(miss).join(groups, "gid").selectExpr(
+                "gid", "fkey", "focus", "ord", "gord",
+                f"{ERR_VOCABULARY} AS code",
+                f"{self._s_stack('stk', frame)} AS stack",
+            ))
 
-        value = self._s_node_value(shape, f)
-        if isinstance(shape, ResourceShape) and shape.vocabulary is not None:
-            entries = ", ".join(
-                f"{s_str(kv[1].key())}, {s_str(kv[0])}"
-                for kv in shape.vocabulary
-            )
-            raw = f"try_element_at(map({entries}), {s_term_key(f)})"
-            with_v = matched.selectExpr("*", f"{raw} AS __vv")
-            missed = with_v.where("__vv IS NULL")
-            if not self._suppress_errors and self._track:
-                mg = missed.join(groups, "gid")
-                self._emit(mg.selectExpr(
-                    "gid", "fkey", "focus", "ord", "gord",
-                    f"{ERR_VOCABULARY} AS code",
-                    f"{self._s_stack('stk', self._s_frame_json(shape, 'edge', f))} AS stack",
-                ))
-            matched = with_v.where("__vv IS NOT NULL")
-            value = s_json_quote("__vv")
+        self._capture_refs(shape, matched)
 
         matches = matched.selectExpr(
             "gid", "fkey", "focus", "'' AS vkey", "ord",
-            f"({value}) AS value",
+            f"({self._s_node_value(shape, f)}) AS value",
         )
         return Result(matches, mismatches, per_group=False)
 
     def _s_node_value(self, shape, t: str) -> str:
-        """ValueMapper.mapByDefault → JSON fragment (value-mapping.ts)."""
+        """ValueMapper.mapByDefault → JSON fragment (value-mapping.ts).
+        Only meaningful for a matching term (a vocabulary miss has no
+        value)."""
         if isinstance(shape, ResourceShape):
-            if shape.keep_as_term or shape.vocabulary is not None:
+            vkey = self._s_vocab_key(shape, t)
+            if vkey is not None:
+                return s_json_quote(vkey)
+            if shape.keep_as_term:
                 return s_term_json(t)
             bn = s_json_quote(f"concat('_:', ({t}).value)")
             plain = s_json_quote(f"({t}).value")
@@ -670,8 +700,11 @@ class FrameEngine:
             s = self.catalog.get(sid)
             if not isinstance(s, (ResourceShape, LiteralShape)):
                 return None
-            if isinstance(s, ResourceShape) and s.vocabulary is not None:
-                return None  # vocabulary misses need the error channel
+            if self._track and isinstance(s, ResourceShape) and \
+                    s.vocabulary is not None:
+                # a miss is no match and no mismatch (_s_node_miss); the
+                # stats express that, but not its ERR_VOCABULARY row
+                return None
             if sid.key() in self._collectors:
                 return None  # computed-property reference capture
             return s
@@ -714,7 +747,9 @@ class FrameEngine:
                         f"{self.max_gather_degree})")
 
         fail_x, code_x = self._s_node_checks(leaf, "x.o")
-        matched = f"filter({objs}, x -> NOT {fail_x})"
+        # vocabulary misses land in neither array
+        hit_x = f"NOT {self._s_node_nomatch(leaf, 'x.o')}"
+        matched = f"filter({objs}, x -> {hit_x})"
         if leaf.lenient:
             # lenient leaf: mismatching candidates silently skipped
             failed = EMPTY_OBJS_SQL

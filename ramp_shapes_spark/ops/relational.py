@@ -600,9 +600,9 @@ def oracle_path_zero_or_one() -> str:
     """
 
 
-def q_vocabulary_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary resolution: region IRIs map to static keys
-    (frame.ts vocabulary branch of frameNode)."""
+def vocabulary_region_shape():
+    """(catalog, Nation record) of :func:`q_vocabulary_region`: a
+    nation's region IRI framed through a five-key vocabulary."""
     b = ShapeBuilder()
     vocab = {f"r{k}": iri(f"reg:{k}") for k in range(5)}
     nation = b.record(
@@ -615,7 +615,14 @@ def q_vocabulary_region(spark: SparkSession, sf_dir: str) -> DataFrame:
                  b.resource(vocabulary=vocab)),
         ],
     )
-    engine = FrameEngine(spark, b.catalog, supplier_graph(spark, sf_dir),
+    return b.catalog, nation
+
+
+def q_vocabulary_region(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Vocabulary resolution: region IRIs map to static keys
+    (frame.ts vocabulary branch of frameNode)."""
+    catalog, nation = vocabulary_region_shape()
+    engine = FrameEngine(spark, catalog, supplier_graph(spark, sf_dir),
                          diagnostics=False, track_errors=False)
     res = engine.frame(nation)
     return res.matches.select(

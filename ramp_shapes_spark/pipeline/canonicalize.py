@@ -36,6 +36,16 @@ from pyspark.sql import functions as F
 MAX_ROUNDS = 50
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks behind a ``localCheckpoint`` DataFrame.
+    ``DataFrame.unpersist`` does not reach them: they belong to the RDD
+    the checkpoint wraps, not to the cache manager.  ``df`` must not be
+    read afterwards."""
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 def _nbrs(edges: DataFrame) -> DataFrame:
     """Undirected adjacency (n, x), self-loops removed.
 
@@ -433,6 +443,7 @@ def canonical_entity_map(link_edges: DataFrame, hot_k: int = 64,
         .localCheckpoint(eager=False)
     if driver_threshold > 0 and cur.count() <= driver_threshold:
         comp = _union_find(cur)
+        release_checkpoint(cur)
         by_comp: dict = {}
         for n, c in comp.items():
             key = (0 if n.startswith("entity:") else 1, n)

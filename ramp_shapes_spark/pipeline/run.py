@@ -17,7 +17,7 @@ here as a distributed pipeline stage.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ramp_shapes_spark.flatten import flatten_triples
 from ramp_shapes_spark.frame import FrameEngine
 
-from .canonicalize import canonical_entity_map
+from .canonicalize import canonical_entity_map, release_checkpoint
 from .kgshapes import build_kg_catalog, kg
 from .materialize import materialize_triples
 from .mentions import detect_mentions, link_edges, score_links
@@ -166,10 +166,24 @@ class PipelineResult:
     frame_result: "object"    # FrameResult (errors assembled lazily)
     triples: DataFrame        # canonical (tid, s, p, o)
     metrics: Dict
+    # the persisted extraction graph and the checkpointed entity map
+    # behind framed/triples, released by close()
+    _ext: Optional[DataFrame] = field(default=None, repr=False)
+    _node_map: Optional[DataFrame] = field(default=None, repr=False)
 
     @property
     def frame_errors(self) -> DataFrame:
         return self.frame_result.errors
+
+    def close(self) -> None:
+        """Release the persisted extraction graph and the checkpointed
+        entity map.  Call once the result has been materialized or
+        collected: its DataFrames must not be read afterwards."""
+        if self._ext is not None:
+            self._ext.unpersist()
+        if self._node_map is not None:
+            release_checkpoint(self._node_map)
+        self._ext = self._node_map = None
 
 
 def run_pipeline(
@@ -193,7 +207,7 @@ def run_pipeline(
 
     # scored feeds BOTH the extraction graph and the link-edge branch;
     # without the persist, canonical_entity_map would re-run mention
-    # detection (the pandas-UDF pass over every turn) a second time
+    # detection and link scoring over every turn a second time
     scored = score_links(detect_mentions(turns)).persist()
     ext = extraction_triples(turns, scored).persist()
 
@@ -259,4 +273,5 @@ def run_pipeline(
     return PipelineResult(
         framed=framed.matches, frame_result=framed,
         triples=canonical, metrics=metrics,
+        _ext=ext, _node_map=node_map,
     )

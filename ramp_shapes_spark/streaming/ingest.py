@@ -70,13 +70,15 @@ def stream_kg_ingest(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
+        # the batch is materialized on return: release its caches, or
+        # every micro-batch would leave its own behind
         run_pipeline(
             spark, batch_df,
             workdir=os.path.join(root, "batches", f"{batch_id:010d}"),
             n_buckets=n_buckets,
             input_fingerprint=f"stream-batch-{batch_id}",
             track_errors=track_errors,
-        )
+        ).close()
 
     return (
         turns.writeStream

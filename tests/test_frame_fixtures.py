@@ -16,6 +16,7 @@ evaluation is safe.
 """
 
 import json
+import os
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -28,6 +29,9 @@ from ramp_shapes_spark.frame import FrameEngine
 from ramp_shapes_spark.shape_ttl import load_shapes_from_file
 
 TD = "/root/reference/test-data"
+if not os.path.isdir(TD):
+    pytest.skip(f"reference golden fixtures not found at {TD}",
+                allow_module_level=True)
 
 FRAME_CASES = [
     c["name"] for c in json.load(open(f"{TD}/index.json"))

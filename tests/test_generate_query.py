@@ -11,6 +11,7 @@ variable names included (the generator mirrors the reference's
 """
 
 import json
+import os
 import re
 
 import pytest
@@ -22,6 +23,9 @@ from ramp_shapes_spark.generate_query import (
 from ramp_shapes_spark.shape_ttl import load_shapes_from_file
 
 TD = "/root/reference/test-data"
+if not os.path.isdir(TD):
+    pytest.skip(f"reference golden fixtures not found at {TD}",
+                allow_module_level=True)
 
 CASES = [
     c["name"] for c in json.load(open(f"{TD}/index.json"))

@@ -83,3 +83,21 @@ def test_snapshot_delta_key_validation(spark):
     with pytest.raises(ValueError, match="missing"):
         snapshot_delta(old, new, key_cols=["k", "v"])
     assert snapshot_delta(old, new, key_cols=["k"]).count() == 0
+
+
+def test_vocabulary_region_single_aggregation_pass(spark):
+    """vocabulary_region frames through the fast tree: ONE aggregation
+    over the triples on top of the graph's own plan, and no join (the
+    general compiler ran ~40 operations per record site)."""
+    import re
+
+    from ramp_shapes_spark.ops.relational import supplier_graph
+
+    def n_ops(df, op):
+        opt = df._jdf.queryExecution().optimizedPlan().toString()
+        return len(re.findall(rf"\b{op} ", opt))
+
+    df = _entry()["vocabulary_region"](spark, SF)
+    graph = supplier_graph(spark, SF)
+    assert n_ops(df, "Aggregate") == n_ops(graph, "Aggregate") + 1
+    assert n_ops(df, "Join") == 0

@@ -2,6 +2,7 @@
 roundtrips on every non-error frame golden."""
 
 import json
+import os
 
 import pytest
 
@@ -14,6 +15,9 @@ from ramp_shapes_spark.shape_ttl import load_shapes_from_file
 from ramp_shapes_spark.ttl import parse_turtle_file
 
 TD = "/root/reference/test-data"
+if not os.path.isdir(TD):
+    pytest.skip(f"reference golden fixtures not found at {TD}",
+                allow_module_level=True)
 
 
 def test_flatten_object1():

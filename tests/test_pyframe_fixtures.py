@@ -13,6 +13,9 @@ from ramp_shapes_spark.shape_ttl import load_shapes_from_file
 from ramp_shapes_spark.ttl import parse_turtle_file
 
 TD = "/root/reference/test-data"
+if not os.path.isdir(TD):
+    pytest.skip(f"reference golden fixtures not found at {TD}",
+                allow_module_level=True)
 
 FRAME_CASES = [
     c["name"] for c in json.load(open(f"{TD}/index.json"))

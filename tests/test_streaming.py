@@ -77,6 +77,26 @@ def test_incremental_drops_and_exactly_once(spark, drops, tmp_path):
     assert _manifest_rows(root) == rows2
 
 
+def test_drain_releases_batch_caches(spark, drops, tmp_path):
+    """Each micro-batch releases its persisted extraction graph and
+    checkpointed entity maps once materialized: a two-drop drain adds
+    no persistent RDD to the session (earlier tests' RDDs may be
+    cleaned meanwhile, so the check is on new ids, not the count)."""
+    d, t1, t2 = drops
+    root = str(tmp_path / "kgroot")
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persistent()
+    t1.write.mode("append").parquet(d)
+    _drain(spark, d, root)
+    t2.write.mode("append").parquet(d)
+    _drain(spark, d, root)
+    assert len(glob.glob(os.path.join(root, "batches", "*"))) == 2
+    assert persistent() - before == set()
+
+
 def test_windowed_turn_rates(spark, drops, tmp_path):
     d, t1, _t2 = drops
     t1.write.mode("append").parquet(d)

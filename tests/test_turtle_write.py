@@ -10,6 +10,7 @@ covered by test_pipeline's engine paths).
 """
 
 import json
+import os
 
 import pytest
 
@@ -163,12 +164,15 @@ def test_roundtrip_groups_lists_and_literals():
 
 # every non-error frame fixture: flatten the golden matches with the
 # reference-semantics interpreter, serialize, re-parse, compare
+_HAVE_TD = os.path.isdir(TD)
 _CASES = [
     c["name"] for c in json.load(open(f"{TD}/index.json"))
     if c["type"] == "frame" and "err" not in c["name"]
-]
+] if _HAVE_TD else []
 
 
+@pytest.mark.skipif(not _HAVE_TD,
+                    reason=f"reference golden fixtures not found at {TD}")
 @pytest.mark.parametrize("name", _CASES)
 def test_roundtrip_reference_fixture(name):
     golden = json.load(open(f"{TD}/frame/{name}.json"))

@@ -2,12 +2,13 @@
 
 Derives reference error codes (errors.ts:16-59) for record candidates
 that fail a qualifying fast tree from the SAME counter aggregations the
-match relation uses (``__nm``/``__nf``/``__nt`` + first-failing-term,
-:mod:`ramp_shapes_spark.fastframe`), so ``track_errors=True`` no longer
-forces the ~40-op-per-site general compiler when shape stacks are not
-requested (``diagnostics=False``).  The channel is assembled INSIDE the
-lazy ``FrameResult.errors`` thunk — consumers that never read it (the
-benchmark queries, most pipelines) never pay for it at all.
+match relation uses (``__nm``/``__nf``/``__nt`` + first-failing-term;
+both build the scalar base with :func:`fastframe.scalar_counts`), so
+``track_errors=True`` no longer forces the ~40-op-per-site general
+compiler when shape stacks are not requested (``diagnostics=False``).
+The channel is assembled INSIDE the lazy ``FrameResult.errors`` thunk —
+consumers that never read it (the benchmark queries, most pipelines)
+never pay for it at all.
 
 Contract: ONE error row per failing gate-passing root candidate,
 carrying the first failing property's code in declaration order — the
@@ -16,7 +17,7 @@ The general path additionally re-emits deeper per-site rows for the
 same failure (one per nested evaluation site); consumers routing or
 counting failures by code see the same failures either way.  ``stack``
 is NULL by construction (this path only runs with
-``diagnostics=False``); ``ord`` is the subject-gather order surrogate
+``diagnostics=False``); ``ord`` is the scalar-base order surrogate
 (min tid as subject), not the universe first-appearance order.
 
 Known tie-break approximations vs the general compiler (failure
@@ -46,7 +47,7 @@ from pyspark.sql import functions as F
 from . import fastframe
 from .fastframe import _FOCUS_SQL, _classify, _edges
 from .shapes import Property, RecordShape, Shape, ShapeID, is_self_path
-from .sqlutil import s_str, s_term_key
+from .sqlutil import s_term_key
 
 ERR_SHAPE_MISMATCH = 201
 ERR_NO_PROPERTY_MATCHES = 203
@@ -68,42 +69,11 @@ def error_capable(engine, shape: Shape) -> bool:
     if not isinstance(shape, RecordShape) or \
             not fastframe.qualifies(engine, shape):
         return False
-    ok = any(
+    return any(
         (engine._fast_kind(p) or ("",))[0] == "plain"
         and not is_self_path(p.path)
         for p in shape.type_properties
     )
-    if not ok:
-        return False
-    # a bounded-set gather property forces record_rel onto the
-    # degree-capped pmap base, while this module's mismatch relation
-    # rebuilds EXACT counters — an over-cap subject would then fail the
-    # match relation yet look fine to the error channel and vanish from
-    # both; route such shapes to the general compiler instead
-    def has_pmap_base(sid) -> bool:
-        rec: RecordShape = engine.catalog.get(sid)
-        for p in list(rec.type_properties) + list(rec.properties):
-            fk = engine._fast_kind(p)
-            if fk is not None and fk[0] not in ("plain", "optional") \
-                    and not is_self_path(p.path):
-                return True
-            plan = _classify(engine, p)
-            if plan is not None and plan[0] in ("record", "optrec",
-                                                "bigsetrec"):
-                if has_pmap_base(plan[3 if plan[0] == "record" else 4]):
-                    return True
-            if plan is not None and plan[0] in ("map", "mapref"):
-                if has_pmap_base(plan[4]):
-                    return True
-        return False
-
-    if has_pmap_base(shape.id):
-        return False
-    # every nested record shape must be code-derivable too (qualifies
-    # already guarantees they are fast records; nothing further needed
-    # — bubbling joins their mismatch relations which cover their own
-    # scalar bases, with the absent-subject code derived statically)
-    return True
 
 
 def _absent_code_sql(engine, sid: ShapeID, term: str) -> str:
@@ -117,21 +87,16 @@ def _absent_code_sql(engine, sid: ShapeID, term: str) -> str:
     for p in list(shape.type_properties) + list(shape.properties):
         plan = _classify(engine, p)
         kind = plan[0]
-        if kind == "gather":
-            k, wrapper, leaf = plan[1], plan[2], plan[3]
+        if kind == "scalar":
             if is_self_path(p.path):
-                fail, code = engine._s_node_checks(leaf, term)
+                fail, code = engine._s_node_checks(plan[3], term)
                 cases.append(f"WHEN {fail} THEN ({code})")
                 continue
-            if k == "plain":
+            if plan[1] == "plain":
                 cases.append(f"WHEN true THEN {ERR_NO_PROPERTY_MATCHES}")
                 settled = True
                 break
-            if k == "set" and (wrapper.min_count or 0) > 0:
-                cases.append(f"WHEN true THEN {ERR_MIN_COUNT}")
-                settled = True
-                break
-            continue  # optional / empty-ok set: matches empty
+            continue  # optional: matches empty
         if kind == "anyleaf":
             cases.append(f"WHEN true THEN {ERR_NO_PROPERTY_MATCHES}")
             settled = True
@@ -144,14 +109,13 @@ def _absent_code_sql(engine, sid: ShapeID, term: str) -> str:
             cases.append(f"WHEN true THEN {ERR_NO_PROPERTY_MATCHES}")
             settled = True
             break
-        if kind in ("bigset", "bigsetrec"):
-            if (plan[3].min_count or 0) > 0:
-                cases.append(f"WHEN true THEN {ERR_MIN_COUNT}")
-                settled = True
-                break
-        if kind == "pathset":
-            if (plan[2].min_count or 0) > 0:
-                cases.append(f"WHEN true THEN {ERR_MIN_COUNT}")
+        if kind in ("bigset", "bigsetrec", "pathset"):
+            sshape = plan[2] if kind == "pathset" else plan[3]
+            if (sshape.min_count or 0) > 0:
+                # a failing lenient set leaves the property unmatched
+                code = (ERR_NO_PROPERTY_MATCHES if sshape.lenient
+                        else ERR_MIN_COUNT)
+                cases.append(f"WHEN true THEN {code}")
                 settled = True
                 break
         # optrec / map / mapref / optional pathleaf tolerate emptiness
@@ -161,6 +125,28 @@ def _absent_code_sql(engine, sid: ShapeID, term: str) -> str:
         # empty), kept as a loud generic fallback
         cases.append(f"WHEN true THEN {ERR_SHAPE_MISMATCH}")
     return "CASE " + " ".join(cases) + " END"
+
+
+def _set_outcome(sshape, nt: str, nm: str, fc: str) -> Tuple[str, str]:
+    """(ok, code) SQL of a set property from its item counters ``nt``
+    (all items) and ``nm`` (matching items): every item must match —
+    else ``fc``, the first failing item's code — and ``nm`` must lie
+    within minCount/maxCount (219/220).  The general compiler skips a
+    failing LENIENT set, so the record then reports the property as
+    unmatched (203)."""
+    min_c = sshape.min_count or 0
+    max_c = sshape.max_count
+    bounds = f"({nm} >= {min_c})"
+    if max_c is not None:
+        bounds += f" AND ({nm} <= {max_c})"
+    ok = f"({nt} = {nm} AND {bounds})"
+    if sshape.lenient:
+        return ok, f"{ERR_NO_PROPERTY_MATCHES}"
+    code = f"CASE WHEN {nt} != {nm} THEN {fc} "
+    code += f"WHEN {nm} < {min_c} THEN {ERR_MIN_COUNT} "
+    if max_c is not None:
+        code += f"WHEN {nm} > {max_c} THEN {ERR_MAX_COUNT} "
+    return ok, code + "END"
 
 
 def _child_coded_edges(engine, e: DataFrame, child_sid: ShapeID,
@@ -223,50 +209,13 @@ def mismatch_rel(engine, sid: ShapeID) -> DataFrame:
     n_type = len(shape.type_properties)
 
     # ---- scalar base with first-failing terms (one groupBy)
-    agg_exprs: List[str] = ["min(tid) AS sord"]
-    preds: List[str] = []
-    for i, (prop, plan) in enumerate(all_props):
-        nmatch = None
-        if plan[0] == "anyleaf":
-            # per-(triple, variant) match count — MUST mirror
-            # fastframe._scalar_base exactly (the match relation counts
-            # one match row per matching variant, like the general
-            # compiler's _compile_anyof)
-            checks = [engine._s_node_checks(leaf, "o")[0]
-                      for leaf in plan[1]]
-            fail = "(" + " AND ".join(checks) + ")"
-            nmatch = "(" + " + ".join(
-                f"IF(NOT {c}, 1, 0)" for c in checks) + ")"
-        elif plan[0] == "gather" and not is_self_path(prop.path):
-            fail, _ = engine._s_node_checks(plan[3], "o")
-        else:
-            continue
-        pc = f"p = {s_str(prop.path.predicate)}"
-        if nmatch is not None:
-            agg_exprs.append(
-                f"coalesce(sum(CASE WHEN {pc} THEN {nmatch} ELSE 0 END), "
-                f"0) AS __nm{i}")
-        else:
-            agg_exprs.append(
-                f"count(CASE WHEN {pc} AND NOT {fail} THEN 1 END) "
-                f"AS __nm{i}")
-        agg_exprs.append(
-            f"count(CASE WHEN {pc} AND ({fail}) THEN 1 END) AS __nf{i}")
-        agg_exprs.append(
-            f"min(CASE WHEN {pc} AND ({fail}) "
-            f"THEN struct(tid, o) END) AS __ff{i}")
-        if prop.path.predicate not in preds:
-            preds.append(prop.path.predicate)
-    t = engine.triples.where(F.col("p").isin(preds)).selectExpr(
-        f"{s_term_key('s')} AS skey", "p", "tid", "o")
-    rel = t.groupBy("skey").agg(
-        F.expr(agg_exprs[0]), *[F.expr(e) for e in agg_exprs[1:]])
+    rel = fastframe.scalar_counts(engine, all_props, first_fail=True)
     rel = rel.selectExpr("*", f"{_FOCUS_SQL} AS focus")
 
     oks: List[Optional[str]] = [None] * len(all_props)
     codes: List[Optional[str]] = [None] * len(all_props)
 
-    # ---- gather / anyleaf properties: counter expressions
+    # ---- scalar / anyleaf properties: counter expressions
     for i, (prop, plan) in enumerate(all_props):
         if plan[0] == "anyleaf":
             nm, nf = f"__nm{i}", f"__nf{i}"
@@ -276,7 +225,7 @@ def mismatch_rel(engine, sid: ShapeID) -> DataFrame:
                 f"WHEN {nm} = 0 THEN {ERR_NO_PROPERTY_MATCHES} "
                 f"ELSE {ERR_MULTIPLE_PROPERTY_MATCHES} END")
             continue
-        if plan[0] != "gather":
+        if plan[0] != "scalar":
             continue
         kind, wrapper, leaf = plan[1], plan[2], plan[3]
         if is_self_path(prop.path):
@@ -298,7 +247,7 @@ def mismatch_rel(engine, sid: ShapeID) -> DataFrame:
                     f"CASE WHEN {nf} > 0 THEN ({code_ff}) "
                     f"WHEN {nm} = 0 THEN {ERR_NO_PROPERTY_MATCHES} "
                     f"ELSE {ERR_MULTIPLE_PROPERTY_MATCHES} END")
-        elif kind == "optional":
+        else:  # optional
             fails_ok = wrapper.lenient or leaf.lenient
             oks[i] = (f"({nm} <= 1)" if fails_ok else
                       f"({nf} = 0 AND {nm} <= 1)")
@@ -306,34 +255,11 @@ def mismatch_rel(engine, sid: ShapeID) -> DataFrame:
                     f"WHEN {nf} > 0 THEN ({code_ff}) ")
             codes[i] = (
                 f"CASE {mism}ELSE {ERR_MULTIPLE_PROPERTY_MATCHES} END")
-        else:  # bounded set
-            min_c = wrapper.min_count or 0
-            max_c = wrapper.max_count
-            bounds = f"({nm} >= {min_c})"
-            if max_c is not None:
-                bounds += f" AND ({nm} <= {max_c})"
-            # lenient ITEMS are silently skipped (matches
-            # _s_fast_stat's failed = empty) — only the bounds can fail
-            inner_ok = (bounds if leaf.lenient else
-                        f"({nf} = 0 AND {bounds})")
-            oks[i] = inner_ok
-            if wrapper.lenient:
-                # lenient set failure surfaces as "property unmatched"
-                codes[i] = f"{ERR_NO_PROPERTY_MATCHES}"
-            else:
-                code = ("" if leaf.lenient else
-                        f"WHEN {nf} > 0 THEN ({code_ff}) ")
-                code = (f"CASE {code}"
-                        f"WHEN {nm} < {min_c} THEN {ERR_MIN_COUNT} ")
-                if max_c is not None:
-                    code += f"WHEN {nm} > {max_c} THEN {ERR_MAX_COUNT} "
-                code += "END"
-                codes[i] = code
 
     # ---- join-kind properties (one N:1 join each)
     for i, (prop, plan) in enumerate(all_props):
         kind = plan[0]
-        if kind in ("gather", "anyleaf"):
+        if kind in ("scalar", "anyleaf"):
             continue
         if kind == "record":
             e = _edges(engine, plan[1], plan[2])
@@ -372,19 +298,9 @@ def mismatch_rel(engine, sid: ShapeID) -> DataFrame:
             agg = _agg_item_outcomes(ce, i)
             rel = rel.join(agg, rel["skey"] == agg[f"__sk{i}"], "left") \
                 .drop(f"__sk{i}")
-            nt, nm = f"coalesce(__nt{i}, 0)", f"coalesce(__nm{i}, 0)"
-            min_c = sshape.min_count or 0
-            max_c = sshape.max_count
-            bounds = f"({nm} >= {min_c})"
-            if max_c is not None:
-                bounds += f" AND ({nm} <= {max_c})"
-            oks[i] = f"({nt} = {nm} AND {bounds})"
-            code = f"CASE WHEN {nt} != {nm} THEN __fc{i} "
-            code += f"WHEN {nm} < {min_c} THEN {ERR_MIN_COUNT} "
-            if max_c is not None:
-                code += f"WHEN {nm} > {max_c} THEN {ERR_MAX_COUNT} "
-            code += "END"
-            codes[i] = code
+            oks[i], codes[i] = _set_outcome(
+                sshape, f"coalesce(__nt{i}, 0)", f"coalesce(__nm{i}, 0)",
+                f"__fc{i}")
         elif kind in ("map", "mapref"):
             e = _edges(engine, plan[1], plan[2])
             ce = _child_coded_edges(engine, e, plan[4], i)
@@ -454,19 +370,7 @@ def mismatch_rel(engine, sid: ShapeID) -> DataFrame:
                         f"CASE WHEN {nt} != {nm} THEN {fc} "
                         f"ELSE {ERR_MULTIPLE_PROPERTY_MATCHES} END")
             else:  # pathset
-                sshape = plan[2]
-                min_c = sshape.min_count or 0
-                max_c = sshape.max_count
-                bounds = f"(({nm}) >= {min_c})"
-                if max_c is not None:
-                    bounds += f" AND (({nm}) <= {max_c})"
-                oks[i] = f"({nt} = {nm} AND {bounds})"
-                code = f"CASE WHEN {nt} != {nm} THEN {fc} "
-                code += f"WHEN ({nm}) < {min_c} THEN {ERR_MIN_COUNT} "
-                if max_c is not None:
-                    code += f"WHEN ({nm}) > {max_c} THEN {ERR_MAX_COUNT} "
-                code += "END"
-                codes[i] = code
+                oks[i], codes[i] = _set_outcome(plan[2], nt, nm, fc)
         else:  # pragma: no cover - _classify is exhaustive for fast trees
             raise AssertionError(f"unhandled fast plan kind {kind!r}")
 

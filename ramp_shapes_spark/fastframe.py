@@ -1,5 +1,5 @@
-"""Fast-tree record compiler: whole-shape-tree evaluation off the
-gathered subject-property map.
+"""Fast-tree record compiler: whole-shape-tree evaluation as one
+aggregation pass per record plus one join per nested value.
 
 The general record compiler (:mod:`ramp_shapes_spark.frame`) threads
 candidate sets and error groups through every evaluation site — ~40
@@ -10,10 +10,11 @@ nested records, or reference-keyed maps over single forward/inverse
 predicates — the whole tree collapses to:
 
 * ONE relation per record shape: ``(fkey, __fval)`` for every matching
-  subject, derived from the shared per-subject gather
-  (:meth:`FrameEngine.subject_props`) with one fused ``selectExpr``
-  (all leaf property stats) plus one left join per record-valued /
-  set-valued / map-valued property;
+  subject, derived from ONE record base — the scalar base, a single
+  groupBy of the record's plain/optional/anyOf-leaf predicates with
+  O(1)-state counters per property (:func:`scalar_counts`) — plus one
+  left join per record-valued / set-valued / map-valued / path-valued
+  property;
 * relations are memoized per (shape, capture) on the engine, so a
   shape referenced from several sites is compiled and executed once —
   the distributed analog of the reference's ``(shape, term)`` match
@@ -21,19 +22,20 @@ predicates — the whole tree collapses to:
 * evaluation sites join the relation on the candidate key — matches
   and mismatch rows in two operations.
 
-Semantics parity: leaf stats reuse the general path's
-``_s_fast_stat`` / ``_s_node_value`` expression builders verbatim;
+Semantics parity: leaf checks and values reuse the general path's
+``_s_node_checks`` / ``_s_node_value`` SQL helpers verbatim;
 exactly-one enforcement for record-valued properties follows
 frame.ts:281-305 (any path candidate that mismatches fails the
 property, so a single-object edge must both be unique and match); set
-item mismatches fail the set (frame.ts:429-469); map entries are keyed
-by a captured sub-match part (frame.ts:642-696).
+item mismatches fail the set and ``minCount``/``maxCount`` bound the
+exact per-predicate item count (frame.ts:429-469); map entries are
+keyed by a captured sub-match part (frame.ts:642-696).
 
-Only available without the error channel (``track_errors=False``):
-mismatch rows carry no codes/stacks.  100 TB shape: everything is one
-pass over the gather relation (already bucketed by subject) plus
-per-predicate aggregations of the triples table — no per-site
-candidate shuffles, no md5 key chains.
+Error codes for the same trees come from :mod:`fasterrors`, which
+builds its counters with the same :func:`scalar_counts`.  100 TB
+shape: everything is one pass over the triples per record plus
+per-predicate aggregations — no per-site candidate shuffles, no md5
+key chains, no per-subject arrays or degree caps.
 """
 
 from __future__ import annotations
@@ -50,7 +52,7 @@ from .shapes import (
 )
 from .sqlutil import s_json_quote as _s_json_quote, s_str, s_term_key
 
-__all__ = ["qualifies", "record_rel"]
+__all__ = ["qualifies", "record_rel", "scalar_counts"]
 
 
 def _leaf(engine, sid: ShapeID) -> Optional[Shape]:
@@ -100,18 +102,20 @@ def _anyof_leaves(engine, sid: ShapeID) -> Optional[List[Shape]]:
 
 
 def _classify(engine, prop: Property):
-    """Property plan: ('gather', kind, wrapper, leaf) via the pmap;
-    ('anyleaf', leaves) — an anyOf whose variants are all plain leaves,
-    evaluated like a plain property with a disjunctive term check;
-    ('record', pred, inv, child_sid); ('bigset', pred, inv, set, leaf);
-    ('bigsetrec', pred, inv, set, child_sid);
-    ('pathset', path, set, leaf) — a leaf set over an arbitrary
-    property path (sequence/alternative/zeroOrOne/closure), its
-    relation built by the shared path evaluator from the universe seed;
-    ('map', pred, inv, map, item_sid, key_prop, part); or None."""
+    """Property plan: ('scalar', kind, wrapper, leaf) — a plain or
+    optional leaf over a forward predicate, or a self leaf, evaluated
+    by the scalar base's counters; ('anyleaf', leaves) — an anyOf whose
+    variants are all plain leaves, evaluated like a plain property with
+    a disjunctive term check; ('record', pred, inv, child_sid);
+    ('bigset', pred, inv, set, leaf) — every leaf set, bounded or not,
+    its items counted exactly per predicate; ('bigsetrec', pred, inv,
+    set, child_sid); ('pathset', path, set, leaf) — a leaf set over an
+    arbitrary property path (sequence/alternative/zeroOrOne/closure),
+    its relation built by the shared path evaluator from the universe
+    seed; ('map', pred, inv, map, item_sid, key_prop, part); or None."""
     fk = engine._fast_kind(prop)
-    if fk is not None:
-        return ("gather", fk[0], fk[1], fk[2])
+    if fk is not None and fk[0] != "set":
+        return ("scalar", fk[0], fk[1], fk[2])
     pi = _pred_of(prop.path)
     if pi is None:
         if is_self_path(prop.path):
@@ -222,8 +226,8 @@ def qualifies(engine, shape: Shape) -> bool:
     if cached is not None:
         return cached
     engine._fast_ok[key] = False  # cycle guard (recursive → general path)
-    plans = [_classify(engine, p) for p in shape.properties]
-    tplans = [_classify(engine, p) for p in shape.type_properties]
+    plans = [_classify(engine, p)
+             for p in shape.type_properties + shape.properties]
     ok = (
         key not in engine.recursive_ids
         and not shape.computed_properties
@@ -233,18 +237,11 @@ def qualifies(engine, shape: Shape) -> bool:
         )
         and all(pl is not None for pl in plans)
         # anchor: at least one exactly-one forward property guarantees
-        # every match appears in the subject gather
+        # every match appears in the scalar base
         and any(
             (engine._fast_kind(p) or ("",))[0] == "plain"
             and not is_self_path(p.path)
             for p in shape.type_properties + shape.properties
-        )
-        # anyleaf is implemented by the scalar base only; a bounded-set
-        # property forces the array-gather base → fall back to general
-        and not (
-            any(pl and pl[0] == "anyleaf" for pl in plans)
-            and any(pl and pl[0] == "gather" and pl[1] == "set"
-                    for pl in plans + tplans)
         )
     )
     engine._fast_ok[key] = ok
@@ -300,29 +297,30 @@ def record_rel(engine, sid: ShapeID,
     shuffle seed-proportional row counts instead of one group per
     subject in the table — the shape incremental maintenance needs."""
     if seeds is not None:
-        return _build_rel(engine, sid, captures=None, seeds=seeds)[0]
+        return _build_rel(engine, sid, captures=None, seeds=seeds)
     key = sid.key()
     rel = engine._fast_rel.get(key)
     if rel is not None:
         return rel
-    rel = _build_rel(engine, sid, captures=None)[0]
+    rel = _build_rel(engine, sid, captures=None)
     engine._fast_rel[key] = rel
     return rel
 
 
-def _scalar_base(engine, all_props,
-                 captures: Optional[List[Property]] = None,
-                 seeds: Optional[DataFrame] = None
-                 ) -> Optional[DataFrame]:
-    """ONE groupBy with O(1)-state scalar aggregates instead of the
-    generic windowed pmap gather — available when every gather-kind
-    property is plain / optional / self.  Exactly-one and 0-or-1
-    semantics need only (#matching, #failing, first-match-by-tid) per
-    (subject, predicate), all partial-aggregatable map-side, so there
-    is no sort, no per-subject array/map buffering, and no degree cap
-    to manage: a Zipf-head subject costs the same three counters as
-    any other.  Returns (skey, focus, ord, __st{i}…) or None when a
-    bounded-set property needs the array gather."""
+def scalar_counts(engine, all_props, first_fail: bool = False,
+                  seeds: Optional[DataFrame] = None) -> DataFrame:
+    """The record's scalar base: ONE groupBy of the predicates of its
+    plain / optional / anyOf-leaf properties, with O(1)-state
+    aggregates per property ``i`` — ``__nm{i}`` matching and ``__nf{i}``
+    failing objects, and the first (by tid) matching ``__m1{i}`` or,
+    with ``first_fail``, failing ``__ff{i}`` struct(tid, o).
+    Exactly-one and 0-or-1 semantics need nothing more, all partial-
+    aggregatable map-side, so there is no sort, no per-subject array
+    buffering and no degree cap: a Zipf-head subject costs the same
+    counters as any other.  Returns (skey, sord, counters…); ``sord``
+    (min tid as subject) is the dataset-order surrogate.  The match
+    relation and the error channel (:mod:`fasterrors`) both build their
+    counters here."""
     agg_exprs: List[str] = ["min(tid) AS sord"]
     preds: List[str] = []
     for i, (prop, plan) in enumerate(all_props):
@@ -339,9 +337,7 @@ def _scalar_base(engine, all_props,
             hit = f"NOT {fail}"
             nmatch = "(" + " + ".join(
                 f"IF(NOT {c}, 1, 0)" for c in checks) + ")"
-        elif plan[0] == "gather" and not is_self_path(prop.path):
-            if plan[1] not in ("plain", "optional"):
-                return None  # bounded sets need the array gather
+        elif plan[0] == "scalar" and not is_self_path(prop.path):
             fail, _ = engine._s_node_checks(plan[3], "o")
             # a vocabulary miss counts in neither __nm nor __nf
             hit = f"NOT {engine._s_node_nomatch(plan[3], 'o')}"
@@ -358,20 +354,34 @@ def _scalar_base(engine, all_props,
                 f"AS __nm{i}")
         agg_exprs.append(
             f"count(CASE WHEN {pc} AND ({fail}) THEN 1 END) AS __nf{i}")
-        agg_exprs.append(
-            f"min(CASE WHEN {pc} AND {hit} "
-            f"THEN struct(tid, o) END) AS __m1{i}")
+        if first_fail:
+            agg_exprs.append(
+                f"min(CASE WHEN {pc} AND ({fail}) "
+                f"THEN struct(tid, o) END) AS __ff{i}")
+        else:
+            agg_exprs.append(
+                f"min(CASE WHEN {pc} AND {hit} "
+                f"THEN struct(tid, o) END) AS __m1{i}")
         if prop.path.predicate not in preds:
             preds.append(prop.path.predicate)
-    if not preds:
-        return None
     t = engine.triples.where(F.col("p").isin(preds)).selectExpr(
         f"{s_term_key('s')} AS skey", "p", "tid", "o")
     if seeds is not None:
         t = t.join(F.broadcast(seeds.selectExpr("fkey AS skey")),
                    "skey", "leftsemi")
-    base = t.groupBy("skey").agg(
+    return t.groupBy("skey").agg(
         F.expr(agg_exprs[0]), *[F.expr(e) for e in agg_exprs[1:]])
+
+
+def _scalar_base(engine, all_props,
+                 captures: Optional[List[Property]] = None,
+                 seeds: Optional[DataFrame] = None) -> DataFrame:
+    """The record base: :func:`scalar_counts` turned into one stat
+    struct ``__st{i}`` (ok, value) per plain / optional / self /
+    anyOf-leaf property.  Returns (skey, focus, ord, __st{i}…
+    [, __capt{ci}…]).  ``qualifies`` guarantees an exactly-one forward
+    anchor, so the base always scans at least one predicate."""
+    base = scalar_counts(engine, all_props, seeds=seeds)
 
     exprs = ["skey", f"{_FOCUS_SQL} AS focus", "sord AS ord"]
     for i, (prop, plan) in enumerate(all_props):
@@ -388,7 +398,7 @@ def _scalar_base(engine, all_props,
                 f"named_struct('ok', {ok}, "
                 f"'value', CAST(({val}) AS STRING)) AS __st{i}")
             continue
-        if plan[0] != "gather":
+        if plan[0] != "scalar":
             continue
         kind, wrapper, leaf = plan[1], plan[2], plan[3]
         if is_self_path(prop.path):
@@ -430,7 +440,7 @@ def _build_rel(engine, sid: ShapeID,
     the given subject keys (and child records to the seed edges'
     objects); composite-path (pathset/pathleaf) relations stay global —
     reachability may pass through non-seed intermediates.  Returns
-    (relation, n_joins) where relation is (fkey, __fval[, __capt0…])."""
+    (fkey, __fval[, __capt0…])."""
     shape: RecordShape = engine.catalog.get(sid)
 
     all_props: List[Tuple[Property, tuple]] = [
@@ -440,47 +450,15 @@ def _build_rel(engine, sid: ShapeID,
     join_specs = []  # (prop index, ok_sql, frag_sql or None)
     stat_cols: Dict[int, str] = {
         i: f"__st{i}" for i, (_, plan) in enumerate(all_props)
-        if plan[0] in ("gather", "anyleaf")
+        if plan[0] in ("scalar", "anyleaf")
     }
 
     rel = _scalar_base(engine, all_props, captures, seeds)
-    if rel is None:
-        # bounded-set properties: the array gather off the shared pmap
-        # (global even under seeds — the gather is engine-shared; the
-        # seed restriction applies on its output)
-        base = engine.subject_props()  # (skey, __pmap, sord)
-        if seeds is not None:
-            base = base.join(F.broadcast(seeds.selectExpr("fkey AS skey")),
-                             "skey", "leftsemi")
-        exprs = ["skey", f"{_FOCUS_SQL} AS focus", "sord AS ord"]
-        for i, (prop, plan) in enumerate(all_props):
-            if plan[0] == "gather" and not is_self_path(prop.path):
-                exprs.append(
-                    f"try_element_at(__pmap, "
-                    f"{s_str(prop.path.predicate)}) AS __po{i}")
-        for i, (prop, plan) in enumerate(all_props):
-            if plan[0] == "gather":
-                engine._entry_col = f"__po{i}"
-                st = engine._s_fast_stat(prop, plan[1], plan[2], plan[3],
-                                         "''")
-                exprs.append(f"({st}) AS __st{i}")
-                if captures:
-                    for ci, cp in enumerate(captures):
-                        if prop is not cp:
-                            continue
-                        # first matched object term (exactly-one ⇒
-                        # unique)
-                        nohit_x = engine._s_node_nomatch(plan[3], "x.o")
-                        objs = f"coalesce((__po{i}).objs, array())"
-                        exprs.append(
-                            f"(try_element_at(filter({objs}, "
-                            f"x -> NOT {nohit_x}), 1)).o AS __capt{ci}")
-        rel = base.selectExpr(*exprs)
 
     # --- per-predicate joins for record/set/map-valued properties
     for i, (prop, plan) in enumerate(all_props):
         kind = plan[0]
-        if kind in ("gather", "anyleaf"):
+        if kind in ("scalar", "anyleaf"):
             continue
         if kind in ("pathset", "pathleaf"):
             e = None  # relation comes from the universal path evaluator
@@ -778,11 +756,11 @@ def _build_rel(engine, sid: ShapeID,
                 "\x1e".join(p.name for p in caps)
             if seeds is not None:  # seeded children are not memoizable
                 child = _build_rel(engine, item_sid, captures=caps,
-                                   seeds=_child_seeds())[0]
+                                   seeds=_child_seeds())
             else:
                 child = engine._fast_rel.get(ikey)
                 if child is None:
-                    child = _build_rel(engine, item_sid, captures=caps)[0]
+                    child = _build_rel(engine, item_sid, captures=caps)
                     engine._fast_rel[ikey] = child
             part_col = (
                 "(__capt0).value" if part == "value" else
@@ -855,7 +833,7 @@ def _build_rel(engine, sid: ShapeID,
     # --- final assembly: gate + value JSON in one selectExpr
     ok_parts: List[str] = []
     for i, (prop, plan) in enumerate(all_props):
-        if plan[0] in ("gather", "anyleaf"):
+        if plan[0] in ("scalar", "anyleaf"):
             ok_parts.append(f"({stat_cols[i]}.ok)")
     for i, ok, frag in join_specs:
         ok_parts.append(ok)
@@ -865,7 +843,7 @@ def _build_rel(engine, sid: ShapeID,
     for i, (prop, plan) in enumerate(all_props):
         if prop.transient:
             continue
-        if plan[0] in ("gather", "anyleaf"):
+        if plan[0] in ("scalar", "anyleaf"):
             st = stat_cols[i]
             ordered.append(
                 f"CASE WHEN ({st}).value IS NOT NULL THEN "
@@ -880,7 +858,7 @@ def _build_rel(engine, sid: ShapeID,
                 "focus AS __ffocus", "ord AS __ford"]
     if captures:
         out_cols.extend(f"__capt{ci}" for ci in range(len(captures)))
-    return rel.where(ok_all).selectExpr(*out_cols), len(join_specs)
+    return rel.where(ok_all).selectExpr(*out_cols)
 
 
 def _jkey(prop: Property) -> str:

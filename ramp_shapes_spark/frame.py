@@ -139,15 +139,17 @@ class FrameResult:
         return row[0]["code"], json.loads(row[0]["stack"])
 
 
-def _try_record_rel(fastframe, engine: "FrameEngine", sid: ShapeID):
-    """Build the fast-tree relation, or return ``None`` when a closure
+def _try_record_rel(fastframe, engine: "FrameEngine", sid: ShapeID,
+                    seeds: Optional[DataFrame] = None):
+    """Build the fast-tree relation (``seeds``: see
+    :func:`fastframe.record_rel`), or return ``None`` when a closure
     path inside it trips the MAX_CLOSURE_GROWTH guard — the universal
     (all-source) closure cannot be demand-driven, but the general
     compiler evaluates the same path with the seeded-frontier fallback,
     so the caller must fall through to it instead of hard-failing on
     data that frames fine via the general path."""
     try:
-        return fastframe.record_rel(engine, sid)
+        return fastframe.record_rel(engine, sid, seeds)
     except RuntimeError as exc:
         if "refusing to go quadratic" not in str(exc):
             raise
@@ -210,7 +212,6 @@ class FrameEngine:
         self._collectors: Dict[str, List[DataFrame]] = {}
         self._universe: Optional[DataFrame] = None
         self._sp_gather: Optional[DataFrame] = None
-        self._entry_col: Optional[str] = None  # bound per fast-stat site
         self._empty_cache: Dict[str, DataFrame] = {}
         self._fast_ok: Dict[str, bool] = {}   # fastframe qualification
         self._fast_rel: Dict[str, DataFrame] = {}  # fastframe relations
@@ -271,23 +272,14 @@ class FrameEngine:
             # semi-joins, so aggregations shuffle candidate-
             # proportional row counts instead of one group per table
             # subject — the incremental-maintenance shape.
-            if not self._track and not self._diag:
+            if not self._track:
                 from . import fastframe
                 shape0 = self.catalog.get(root)
                 if fastframe.qualifies(self, shape0):
-                    if seeded:
-                        seeds = uni.select(
-                            F.expr(s_term_key("focus")).alias("fkey")
-                        ).distinct()
-                        try:
-                            rel = fastframe.record_rel(self, root,
-                                                       seeds=seeds)
-                        except RuntimeError as exc:
-                            if "refusing to go quadratic" not in str(exc):
-                                raise
-                            rel = None
-                    else:
-                        rel = _try_record_rel(fastframe, self, root)
+                    seeds = uni.select(
+                        F.expr(s_term_key("focus")).alias("fkey")
+                    ).distinct() if seeded else None
+                    rel = _try_record_rel(fastframe, self, root, seeds)
                     if rel is not None:
                         ck = uni.select(
                             F.expr(s_term_key("focus")).alias("__ck"),
@@ -644,9 +636,11 @@ class FrameEngine:
         struct<objs: array<struct<tid,o>>, ntot: long>> — the
         relational analog of the reference's SP hash index
         (rdf-dataset.ts:44-50), computed with ONE two-level aggregation
-        for the whole engine.  Leaf-valued record properties evaluate
-        against this map as pure codegen array expressions (zero joins
-        per property).
+        for the whole engine.  Leaf-valued record properties of the
+        general compiler evaluate against this map as pure codegen
+        array expressions (zero joins per property); the fast tree
+        never reads it (``fastframe.scalar_counts`` counts per
+        predicate instead).
 
         DEGREE CAP: each (subject, predicate) keeps only its first
         ``max_gather_degree`` objects (by tid, via a ranked window —
@@ -728,20 +722,21 @@ class FrameEngine:
         return None
 
     def _s_fast_stat(self, prop: Property, kind: str, wrapper: Shape,
-                     leaf: Shape, cstk: str) -> str:
+                     leaf: Shape, cstk: str, entry: str) -> str:
         """Property stat struct (ok, value, fcode, fstack) computed as
         array expressions over the gathered ``__pmap`` column —
         replicates _eval_property + leaf/optional/set semantics with
-        zero joins.  Returns a ``named_struct`` SQL expr string."""
+        zero joins.  ``entry`` names the column holding the property's
+        pre-bound map entry (unused for a self path).  Returns a
+        ``named_struct`` SQL expr string."""
         if is_self_path(prop.path):
             objs = "array(struct(ord AS tid, focus AS o))"
             over_cap = "false"
         else:
-            # ``entry`` names a pre-bound column (__po{i}) selected once
-            # per property — referencing it keeps every stat expression
-            # small instead of inlining the map lookup ~8 times
-            entry = self._entry_col
-            # gather arrays arrive tid-sorted and capped; ntot is true
+            # ``entry`` is selected once per property — referencing it
+            # keeps every stat expression small instead of inlining the
+            # map lookup ~8 times; gather arrays arrive tid-sorted and
+            # capped, ntot is true
             objs = f"coalesce(({entry}).objs, {EMPTY_OBJS_SQL})"
             over_cap = (f"(coalesce(({entry}).ntot, 0) > "
                         f"{self.max_gather_degree})")
@@ -945,8 +940,8 @@ class FrameEngine:
                     f"{s_str(prop.path.predicate)}) AS __po{i}")
         for i, (prop, fk) in enumerate(all_props):
             if fk is not None:
-                self._entry_col = f"__po{i}"
-                st = self._s_fast_stat(prop, fk[0], fk[1], fk[2], "cstk")
+                st = self._s_fast_stat(prop, fk[0], fk[1], fk[2], "cstk",
+                                       f"__po{i}")
                 fused_exprs.append(f"({st}) AS __st{i}")
         if len(fused_exprs) > len(base_cols):
             rc = rc.selectExpr(*fused_exprs) \

@@ -218,7 +218,6 @@ def incremental_frame(spark: SparkSession, catalog: ShapeCatalog,
                       triples_new: DataFrame,
                       added: Optional[DataFrame],
                       removed: Optional[DataFrame],
-                      prune: bool = False,
                       force_incremental: bool = False,
                       **frame_kwargs) -> DataFrame:
     """Maintain ``frame(root)`` across a delta: returns the new
@@ -229,35 +228,26 @@ def incremental_frame(spark: SparkSession, catalog: ShapeCatalog,
     the ``focus`` column).  ``added``/``removed``: the delta as
     ``(s, p, o)`` DataFrames (either may be ``None``).
 
-    **Crossover (measured, round 6).**  The delta-proportional path
-    (affected-root walk → membership probe → seeded re-frame → kept
-    merge) costs a CONSTANT ~5-6 filtered passes over the triple table
-    plus one pass over ``old_matches``, while the fast-tree full
-    re-frame is ONE aggregation pass; on an in-memory/unpruned table
-    the full re-frame therefore wins at every measured scale
-    (24 M triples / 200-row delta: full 4.6 s vs incremental 15.5 s,
-    pruned 18.9 s — tools/incremental_bench.py).  By default this
-    function now DELEGATES to the full re-frame, which satisfies the
-    same contract (its output IS the maintained view).  Pass
-    ``force_incremental=True`` (or ``prune=True``) to run the
-    delta-proportional machinery anyway — the right call only when
-    table scans actually prune (a pbucket-partitioned store read
-    through ``frame_from_store``-style pruning) or the table far
-    exceeds cluster memory, where "one aggregation pass" is no longer
-    cheap and the walk's predicate-pushed, delta-seeded scans are.
-
-    ``prune=True`` first extracts the affected foci's subgraph
-    (subgraph.py, seeded at the affected roots) and re-frames against
-    THAT — the re-frame's joins then touch a delta-proportional slice
-    instead of the full table; the extraction itself is frontier
-    equi-joins whose predicate filters push to the scan (and prune
-    ``pbucket`` partitions when framing off the materialized sink).
-    Frame equality is guaranteed by the subgraph walk's invariant
-    (frame(subgraph) == frame(full) for the walked roots)."""
+    **Crossover.**  The delta-proportional path (affected-root walk →
+    membership probe → seeded re-frame → kept merge) costs a roughly
+    CONSTANT handful of filtered passes over the triple table plus one
+    pass over ``old_matches``, while the fast-tree full re-frame is ONE
+    aggregation pass per record shape.  ``tools/incremental_bench.py``
+    (200-row rename delta, 4-core host, ``local[4]``) measured the full
+    re-frame ahead at both sizes it ran, with the gap closing as the
+    table grows: 0.6 M triples full 2.5-4.1 s vs incremental 6.7-11.5 s,
+    4.5 M triples full 9.5-9.9 s vs incremental 13.4-14.0 s.  By
+    default this function therefore DELEGATES to the full re-frame,
+    which satisfies the same contract (its output IS the maintained
+    view).  Pass ``force_incremental=True`` to run the
+    delta-proportional machinery anyway — the right call once the
+    table is large enough that one aggregation pass over it costs more
+    than the walk's predicate-pushed, delta-seeded scans (a
+    pbucket-partitioned store, or a table far beyond cluster memory).
+    """
     from .frame import FrameEngine
-    from .subgraph import shape_subgraph
 
-    if not force_incremental and not prune:
+    if not force_incremental:
         engine = FrameEngine(spark, catalog, triples_new, **frame_kwargs)
         return engine.frame(root).matches.select(*old_matches.columns)
 
@@ -304,12 +294,7 @@ def incremental_frame(spark: SparkSession, catalog: ShapeCatalog,
             .localCheckpoint(eager=True)
         if roots.isEmpty():
             return kept
-    table = triples_new
-    if prune:
-        table = shape_subgraph(
-            triples_new, catalog, root, roots=roots,
-        ).localCheckpoint(eager=True)
-    engine = FrameEngine(spark, catalog, table, **frame_kwargs)
+    engine = FrameEngine(spark, catalog, triples_new, **frame_kwargs)
     # seeded=True when the affected set is delta-small (the common
     # case): the re-frame's base relations are then restricted to the
     # affected subjects via broadcast semi-joins instead of

@@ -1,18 +1,26 @@
-"""Round-5 review parity fixes: the fast-tree compiler must either
-express lenient semantics exactly or route the shape to the general
-compiler; anyOf match counting is per (triple, variant) like the
-general compiler's _compile_anyof; mapref emits null entry values for
-NULL referenced parts instead of failing the map."""
+"""Fast-tree parity: the fast-tree compiler must either express
+lenient semantics exactly or route the shape to the general compiler;
+anyOf match counting is per (triple, variant) like the general
+compiler's _compile_anyof; mapref emits null entry values for NULL
+referenced parts instead of failing the map; bounded leaf sets count
+their items exactly, with the same matches and error codes as the
+general compiler and the reference interpreter."""
 
 import json
 
+import pytest
+
 from ramp_shapes_spark.dataset import triples_df
+from ramp_shapes_spark.fasterrors import error_capable
 from ramp_shapes_spark.fastframe import qualifies
 from ramp_shapes_spark.frame import FrameEngine
+from ramp_shapes_spark.pyframe import RampError, frame_py
 from ramp_shapes_spark.shapes import (
     ShapeBuilder, ShapeReference, prop,
 )
-from ramp_shapes_spark.terms import RDF_TYPE, XSD_STRING, iri, lit
+from ramp_shapes_spark.terms import (
+    RDF_TYPE, XSD_INTEGER, XSD_STRING, iri, lit,
+)
 
 EX = "http://example.com/fl#"
 
@@ -31,6 +39,91 @@ def _both(spark, b, root, triples):
         out[fast] = {tuple(r["focus"]): json.loads(r["value"])
                      for r in res.matches.collect()}
     return out[True], out[False]
+
+
+def _bounded_root(b, anyleaf=False, **set_kw):
+    props = [prop("id", EX + "id", b.literal(datatype=XSD_STRING)),
+             prop("vals", EX + "val",
+                  b.set_of(b.literal(datatype=XSD_STRING), **set_kw))]
+    if anyleaf:
+        props.insert(1, prop("v", EX + "v", b.any_of(
+            [b.literal(datatype=XSD_STRING),
+             b.literal(datatype=XSD_INTEGER)])))
+    return b.record(EX + "T", type_properties=_anchor_props(b),
+                    properties=props)
+
+
+def _bounded_subjects(anyleaf):
+    def subj(name, vals, vs=(lit("x"),)):
+        s = iri(name)
+        out = [(s, RDF_TYPE, iri(EX + "T")), (s, EX + "id", lit(name))]
+        out += [(s, EX + "v", v) for v in (vs if anyleaf else ())]
+        return out + [(s, EX + "val", v) for v in vals]
+
+    subjects = {
+        "one": subj("one", [lit("a")]),
+        "two": subj("two", [lit("a"), lit("b")]),
+        "none": subj("none", []),
+        "three": subj("three", [lit("a"), lit("b"), lit("c")]),
+        "iri": subj("iri", [iri("x")]),  # the item fails its leaf
+    }
+    if anyleaf:
+        subjects["twov"] = subj("twov", [lit("a")],
+                                vs=(lit("x"), lit("7", dt=XSD_INTEGER)))
+        subjects["nov"] = subj("nov", [lit("a")], vs=())
+    return subjects
+
+
+@pytest.mark.parametrize("anyleaf, set_kw", [
+    (False, {"min_count": 1, "max_count": 2}),
+    (False, {"max_count": 2}),
+    (True, {"min_count": 1, "max_count": 2}),
+    (False, {"min_count": 1, "max_count": 2, "lenient": True}),
+], ids=["min_max", "max_only", "anyleaf", "lenient_set"])
+def test_bounded_leaf_set_parity(spark, anyleaf, set_kw):
+    """A set with a maxCount takes the exact per-predicate set plan:
+    the fast tree (with and without its error channel) and the general
+    compiler agree with the reference interpreter on every subject's
+    value, and on its error code when it fails."""
+    b = ShapeBuilder()
+    root = _bounded_root(b, anyleaf, **set_kw)
+    subjects = _bounded_subjects(anyleaf)
+    # the reference, one subject at a time: its value or first error
+    want = {}
+    for name, ts in subjects.items():
+        try:
+            [want[name]] = frame_py(b.catalog, ts, root)
+        except RampError as exc:
+            want[name] = exc.code
+    triples = [t for ts in subjects.values() for t in ts]
+    runs = {}
+    for run, diag, track in (("fast", False, False),
+                             ("fast_errors", False, True),
+                             ("general", True, True)):
+        engine = FrameEngine(spark, b.catalog, triples_df(spark, triples),
+                             diagnostics=diag, track_errors=track)
+        shape = b.catalog.get(root)
+        assert qualifies(engine, shape)
+        assert error_capable(engine, shape)
+        runs[run] = engine.frame(root)
+    matches = {n: v for n, v in want.items() if isinstance(v, dict)}
+    for run, res in runs.items():
+        got = {}
+        for r in res.matches.collect():
+            v = json.loads(r["value"])
+            got[v["id"]] = v
+        assert got == matches, run
+    codes = {n: c for n, c in want.items() if isinstance(c, int)}
+    assert sorted(r["code"] for r in runs["fast_errors"].errors.collect()) \
+        == sorted(codes.values())
+    # the general channel adds deeper per-site rows for the same
+    # failure; each subject's rows (keyed by their stack's root focus)
+    # all carry the subject's code
+    general = {}
+    for r in runs["general"].errors.collect():
+        focus = json.loads(r["stack"])[0]["focus"].strip("<>")
+        general.setdefault(focus, set()).add(r["code"])
+    assert general == {n: {c} for n, c in codes.items()}
 
 
 def test_anyleaf_overlapping_variants_counts_per_variant(spark):

@@ -222,23 +222,6 @@ def test_recursive_shape_deep_edit(spark):
     assert canon_deep(got) == canon_deep(want)
 
 
-def test_pruned_incremental_equals_full(spark):
-    """prune=True re-frames against the affected subgraph only; the
-    result must still equal the full re-frame."""
-    b = ShapeBuilder()
-    root = _supplier_shape(b)
-    base = _supplier_data(6)
-    old_t, new_t, added, removed = _apply_delta(
-        spark, base,
-        add=[(iri("n1"), EX + "name", lit("renamed-n1"))],
-        remove=[(iri("n1"), EX + "name", lit("nat1"))])
-    old_matches = _full(spark, b, root, old_t).localCheckpoint(eager=True)
-    got = incremental_frame(spark, b.catalog, root, old_matches, new_t,
-                            added, removed, prune=True,
-                            diagnostics=False, track_errors=False)
-    assert _result_set(got) == _result_set(_full(spark, b, root, new_t))
-
-
 def test_leaf_root_sees_new_terms(spark):
     """A leaf root (no traversal paths anywhere in the tree) must still
     pick up brand-new matching terms from the delta — the conservative

@@ -101,3 +101,35 @@ def test_vocabulary_region_single_aggregation_pass(spark):
     graph = supplier_graph(spark, SF)
     assert n_ops(df, "Aggregate") == n_ops(graph, "Aggregate") + 1
     assert n_ops(df, "Join") == 0
+
+
+def test_bounded_set_record_has_no_window(spark):
+    """A record with a maxCount-bounded leaf set frames through the
+    fast tree's exact per-predicate set plan: no ranked window (the
+    degree-capped per-subject gather is general-compiler-only)."""
+    from ramp_shapes_spark.dataset import triples_df
+    from ramp_shapes_spark.frame import FrameEngine
+    from ramp_shapes_spark.shapes import ShapeBuilder, prop
+    from ramp_shapes_spark.terms import RDF_TYPE, XSD_STRING, iri, lit
+
+    ex = "http://example.com/plan#"
+    b = ShapeBuilder()
+    root = b.record(
+        ex + "T",
+        type_properties=[prop("t", RDF_TYPE, b.constant(iri(ex + "T")),
+                              transient=True)],
+        properties=[
+            prop("id", ex + "id", b.literal(datatype=XSD_STRING)),
+            prop("vals", ex + "val",
+                 b.set_of(b.literal(datatype=XSD_STRING), max_count=2)),
+        ],
+    )
+    t = [(iri("s"), RDF_TYPE, iri(ex + "T")), (iri("s"), ex + "id", lit("s")),
+         (iri("s"), ex + "val", lit("a"))]
+    for track in (False, True):
+        engine = FrameEngine(spark, b.catalog, triples_df(spark, t),
+                             diagnostics=False, track_errors=track)
+        res = engine.frame(root)
+        for df in (res.matches, res.errors):
+            opt = df._jdf.queryExecution().optimizedPlan().toString()
+            assert "Window" not in opt, opt

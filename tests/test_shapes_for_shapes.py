@@ -9,9 +9,11 @@ the normalizer cycle-safe for the cyclic fixtures.
 """
 
 import glob
+import os
 
 import pytest
 
+from conftest import REFERENCE_TEST_DATA
 from ramp_shapes_spark.meta_shapes import frame_shapes
 from ramp_shapes_spark.pyframe import UNDEFINED
 from ramp_shapes_spark.shape_ttl import load_shapes_from_graph
@@ -25,6 +27,10 @@ from ramp_shapes_spark.terms import Term
 from ramp_shapes_spark.ttl import parse_turtle_file
 
 SHAPE_FILES = sorted(glob.glob("/root/reference/test-data/shapes/*.ttl"))
+if not os.path.isdir(REFERENCE_TEST_DATA):
+    pytest.skip(
+        f"reference golden fixtures not found at {REFERENCE_TEST_DATA}",
+        allow_module_level=True)
 
 
 def _p(v, default=None):

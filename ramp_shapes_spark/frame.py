@@ -48,7 +48,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dataset import all_candidate_terms
-from .paths import eval_path
+from .paths import ClosureGrowthError, eval_path
 from .shapes import (
     AnyOfShape, ListShape, LiteralShape, MapShape, OptionalShape,
     PredicatePath, Property, RecordShape, ResourceShape, SetShape, Shape,
@@ -150,9 +150,7 @@ def _try_record_rel(fastframe, engine: "FrameEngine", sid: ShapeID,
     data that frames fine via the general path."""
     try:
         return fastframe.record_rel(engine, sid, seeds)
-    except RuntimeError as exc:
-        if "refusing to go quadratic" not in str(exc):
-            raise
+    except ClosureGrowthError:
         return None
 
 
@@ -214,8 +212,9 @@ class FrameEngine:
         self._sp_gather: Optional[DataFrame] = None
         self._empty_cache: Dict[str, DataFrame] = {}
         self._fast_ok: Dict[str, bool] = {}   # fastframe qualification
-        self._fast_rel: Dict[str, DataFrame] = {}  # fastframe relations
-        self._fast_errrel: Dict[str, DataFrame] = {}  # fasterrors rels
+        # fastframe relations (and the universal path relations they
+        # share)
+        self._fast_rel: Dict[str, object] = {}
 
     # ------------------------------------------------------------------
     # public API
@@ -302,18 +301,20 @@ class FrameEngine:
                 # scan would only rediscover candidates the relation
                 # anti-filters anyway.  With the error channel ON the
                 # fast path still applies when stacks are not requested
-                # (diagnostics=False): codes come from the SAME counter
-                # relations, assembled lazily in the errors thunk
-                # (fasterrors.py) — consumers that never read errors
-                # (most pipelines, every bench query) pay nothing.
-                # diagnostics=True (fixture comparisons needing exact
-                # shape-stack strings) keeps the general compiler.
+                # (diagnostics=False): codes come from the SAME property
+                # outcomes, assembled lazily in the errors thunk
+                # (fastframe.root_errors) — consumers that never read
+                # errors (most pipelines, every bench query) pay
+                # nothing.  diagnostics=True (fixture comparisons
+                # needing exact shape-stack strings) keeps the general
+                # compiler.
                 shape0 = self.catalog.get(root)
-                from . import fasterrors, fastframe
-                use_fast = fastframe.qualifies(self, shape0) and (
-                    not self._track
-                    or (not self._diag
-                        and fasterrors.error_capable(self, shape0)))
+                from . import fastframe
+                if self._track:
+                    use_fast = not self._diag and \
+                        fastframe.error_capable(self, shape0)
+                else:
+                    use_fast = fastframe.qualifies(self, shape0)
                 if use_fast:
                     rel = _try_record_rel(fastframe, self, root)
                 if use_fast and rel is not None:
@@ -340,7 +341,7 @@ class FrameEngine:
                     if self._track:
                         return FrameResult(
                             matches,
-                            lambda: fasterrors.root_errors(self, root))
+                            lambda: fastframe.root_errors(self, root))
                     return FrameResult(
                         matches, lambda: self._empty(ERROR_FIELDS))
             uni = self.universe()
@@ -678,6 +679,22 @@ class FrameEngine:
             ).persist()
         return self._sp_gather
 
+    def _fast_leaf(self, sid: ShapeID) -> Optional[Shape]:
+        """The resource/literal shape ``sid`` when the fast paths (the
+        gathered stats and the fast tree) can evaluate it as a leaf,
+        else None."""
+        s = self.catalog.get(sid)
+        if not isinstance(s, (ResourceShape, LiteralShape)):
+            return None
+        if self._track and isinstance(s, ResourceShape) and \
+                s.vocabulary is not None:
+            # every fast site treats a miss as no match and no mismatch
+            # (_s_node_miss), but none emits its ERR_VOCABULARY row
+            return None
+        if sid.key() in self._collectors:
+            return None  # computed-property reference capture
+        return s
+
     def _fast_kind(self, prop: Property) -> Optional[Tuple[str, Shape, Shape]]:
         """Classify a property for the gathered fast path.
 
@@ -690,20 +707,7 @@ class FrameEngine:
         if not (isinstance(prop.path, PredicatePath) or is_self_path(prop.path)):
             return None
 
-        def leaf_ok(sid) -> Optional[Shape]:
-            s = self.catalog.get(sid)
-            if not isinstance(s, (ResourceShape, LiteralShape)):
-                return None
-            if self._track and isinstance(s, ResourceShape) and \
-                    s.vocabulary is not None:
-                # a miss is no match and no mismatch (_s_node_miss); the
-                # stats express that, but not its ERR_VOCABULARY row
-                return None
-            if sid.key() in self._collectors:
-                return None  # computed-property reference capture
-            return s
-
-        direct = leaf_ok(prop.value_shape)
+        direct = self._fast_leaf(prop.value_shape)
         if direct is not None:
             return ("plain", direct, direct)
         wrapper = self.catalog.get(prop.value_shape)
@@ -715,7 +719,7 @@ class FrameEngine:
                 # unbounded sets need every object; the degree-capped
                 # gather can't carry them — general join path instead
                 return None
-            leaf = leaf_ok(wrapper.item_shape)
+            leaf = self._fast_leaf(wrapper.item_shape)
             if leaf is not None:
                 kind = "optional" if isinstance(wrapper, OptionalShape) else "set"
                 return (kind, wrapper, leaf)

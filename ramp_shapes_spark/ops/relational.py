@@ -640,15 +640,16 @@ def oracle_vocabulary_region() -> str:
 
 
 def q_frame_error_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fast-tree ERROR CHANNEL (fasterrors.py) over a deterministically
-    malformed supplier graph: suppliers with suppkey % 7 == 0 lose
+    """Fast-tree ERROR CHANNEL (fastframe.root_errors) over a
+    deterministically malformed supplier graph: suppliers with suppkey % 7 == 0 lose
     their name triple (code 203 NO_PROPERTY_MATCHES), suppkey % 11 == 0
     get a duplicate acct edge (204 MULTIPLE_PROPERTY_MATCHES); a
     subject with both defects reports the FIRST failing property in
     declaration order (name → 203), exactly like the general
     compiler's record-level error row.  ``track_errors=True`` with
     ``diagnostics=False`` routes through the fast tree; the error
-    relation is derived lazily from the same counter aggregations."""
+    relation is derived lazily from the same per-property outcomes as
+    the matches."""
     sup = _load(spark, sf_dir, "supplier")
     sup_iri = F.concat(F.lit("sup:"), F.col("s_suppkey").cast("string"))
     acct = F.col("s_acctbal").cast("string")

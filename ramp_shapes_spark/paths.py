@@ -54,6 +54,11 @@ MAX_CLOSURE_ITERATIONS = 200
 MAX_CLOSURE_GROWTH = 64
 
 
+class ClosureGrowthError(RuntimeError):
+    """The all-source closure outgrew ``MAX_CLOSURE_GROWTH`` times its
+    one-step relation; callers fall back to demand-driven evaluation."""
+
+
 def _dedup(df: DataFrame, keys: List[str]) -> DataFrame:
     """Keep one row per (keys, node) with the smallest tord."""
     return df.groupBy(*keys, "node").agg(F.min("tord").alias("tord"))
@@ -190,9 +195,7 @@ def _closure_from_sites(df: DataFrame, keys: List[str], inner,
     # the seeds' actual reachable set, at diameter-many rounds.
     try:
         r = _closure(_full_step_relation(inner, triples, reverse))
-    except RuntimeError as exc:
-        if "refusing to go quadratic" not in str(exc):
-            raise
+    except ClosureGrowthError:
         return _seeded_closure(df, keys, inner, triples, reverse,
                                include_self)
 
@@ -300,7 +303,7 @@ def _closure(base: DataFrame) -> DataFrame:
             .localCheckpoint(eager=False)
         n = nxt.count()
         if n > base_rows * MAX_CLOSURE_GROWTH:
-            raise RuntimeError(
+            raise ClosureGrowthError(
                 f"property-path closure grew to {n} pairs from a "
                 f"{base_rows}-row one-step relation (> "
                 f"{MAX_CLOSURE_GROWTH}x): the reachability graph is too "

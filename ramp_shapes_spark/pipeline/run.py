@@ -197,12 +197,13 @@ def run_pipeline(
 ) -> PipelineResult:
     """``track_errors=True`` (default) routes malformed turns into the
     coded error channel — ``PipelineResult.frame_errors`` keeps its
-    original contract for existing callers.  Since the fast-tree error
-    channel (fasterrors.py) qualifying shapes compile through the fast
-    path EITHER WAY when ``diagnostics`` is off: with ``True`` the
-    coded error relation is assembled lazily on first access (measured
-    identical pipeline wall time); with ``False`` ``frame_errors`` is
-    empty BY CONSTRUCTION, not because the input was clean."""
+    original contract for existing callers.  Qualifying shapes compile
+    through the fast tree (fastframe.py, whose error channel derives
+    codes from the same property outcomes as the matches) EITHER WAY
+    when ``diagnostics`` is off: with ``True`` the coded error relation
+    is assembled lazily on first access (measured identical pipeline
+    wall time); with ``False`` ``frame_errors`` is empty BY
+    CONSTRUCTION, not because the input was clean."""
     import threading
 
     # scored feeds BOTH the extraction graph and the link-edge branch;

@@ -144,6 +144,51 @@ def test_pathset_fast_route_parity(spark):
     assert len(results[True]) == 2  # n and c1 carry labels
 
 
+def test_pathset_error_parity(spark):
+    """The typed form of the composite-path set shape above, with the
+    fast error channel on: each failing subject's code equals the
+    reference's first error — an item reached through the closure that
+    fails the item leaf (221), a zeroOrOne set holding self and the
+    next node over its maxCount (220), too few reached items (219)."""
+    from fastparity import assert_error_parity, bundles
+
+    from ramp_shapes_spark.shapes import SELF_PATH, ZeroOrOnePath
+
+    def node(name, label, nxt=()):
+        s = iri(name)
+        t = [(s, RDF_TYPE, iri(EX + "Node")), (s, EX + "label", lit(label))]
+        return t + [(s, EX + "next", o) for o in nxt]
+
+    triples = (
+        node("ok", "ok", [iri("c1")])
+        + [(iri("c1"), EX + "next", iri("c2"))]
+        + node("lit", "lit", [iri("d1")])
+        + [(iri("d1"), EX + "next", lit("not-a-resource"))]
+        + node("two", "two", [iri("e1"), iri("e2")])
+        + node("none", "none")
+        + node("self", "self", [iri("self")])
+    )
+    b = ShapeBuilder()
+    root = b.record(
+        EX + "Node",
+        type_properties=[prop("t", RDF_TYPE, b.constant(iri(EX + "Node")),
+                              transient=True)],
+        properties=[
+            prop("id", SELF_PATH, b.resource(only_named=True)),
+            prop("label", EX + "label", b.literal(datatype=XSD_STRING)),
+            prop("reach", OneOrMorePath(PredicatePath(EX + "next")),
+                 b.set_of(b.resource(only_named=True), min_count=1)),
+            prop("maybe_next", ZeroOrOnePath(PredicatePath(EX + "next")),
+                 b.set_of(b.resource(only_named=True), max_count=2)),
+        ],
+    )
+    subjects = bundles(triples, [iri(n) for n in
+                                 ("ok", "lit", "two", "none", "self")])
+    want = assert_error_parity(spark, b.catalog, root, subjects)
+    assert {n: c for n, c in want.items() if isinstance(c, int)} == \
+        {"lit": 221, "two": 220, "none": 219}
+
+
 def test_fast_root_ordered_parity(spark):
     """ordered=True on the fast root must follow findAllCandidates order
     (first appearance as subject OR object) — here `b` appears first as

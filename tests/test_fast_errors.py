@@ -1,4 +1,4 @@
-"""Fast-tree error channel (fasterrors.py) vs the general compiler.
+"""Fast-tree error channel (fastframe.root_errors) vs the general compiler.
 
 With ``track_errors=True, diagnostics=False`` a qualifying root shape
 now frames through the fast tree and derives error CODES lazily from
@@ -13,7 +13,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from ramp_shapes_spark import fasterrors, fastframe
+from ramp_shapes_spark import fastframe
 from ramp_shapes_spark.dataset import triples_df
 from ramp_shapes_spark.frame import FrameEngine
 from ramp_shapes_spark.pipeline.kgshapes import build_kg_catalog, kg
@@ -91,7 +91,7 @@ def test_fast_error_channel_parity(spark):
     fast, root1, general, root2 = _engines(spark)
     shape = fast.catalog.get(root1)
     assert fastframe.qualifies(fast, shape)
-    assert fasterrors.error_capable(fast, shape)
+    assert fastframe.error_capable(fast, shape)
 
     fres = fast.frame(root1)
     gres = general.frame(root2)
@@ -139,3 +139,56 @@ def test_fast_error_gate_fail_not_error(spark):
     res = eng.frame(root)
     assert res.matches.count() == 0
     assert res.errors.count() == 0
+
+
+def test_child_code_without_scalar_edges(spark):
+    """A child record's object that has no edge on the child's plain /
+    optional leaf predicates still reports the code of the child's
+    first failing property — a record- or set-valued one before the
+    anchor included — and a literal object is no record (205)."""
+    from fastparity import assert_error_parity, bundles
+
+    from ramp_shapes_spark.shapes import ShapeBuilder, prop
+
+    ex = "http://example.com/fe#"
+    b = ShapeBuilder()
+    d = b.record(ex + "D", properties=[
+        prop("dn", ex + "dn", b.literal(datatype=XSD_STRING))])
+    c = b.record(ex + "C", properties=[
+        prop("x", ex + "x", d),
+        prop("tags", ex + "tag",
+             b.set_of(b.literal(datatype=XSD_STRING), min_count=1)),
+        prop("name", ex + "name", b.literal(datatype=XSD_STRING)),
+    ])
+    root = b.record(ex + "T", type_properties=[
+        prop("t", RDF_TYPE, b.constant(iri(ex + "T")), transient=True)],
+        properties=[prop("id", ex + "id", b.literal(datatype=XSD_STRING)),
+                    prop("c", ex + "c", c)])
+    t = []
+    for name, child in (("good", ["x", "tag", "name"]), ("twox", ["x", "x"]),
+                        ("badd", ["badx"]), ("badtag", ["x", "badtag"]),
+                        ("notag", ["x"]), ("bare", []), ("lit", None)):
+        s = iri(name)
+        t += [(s, RDF_TYPE, iri(ex + "T")), (s, ex + "id", lit(name))]
+        if child is None:
+            t.append((s, ex + "c", lit("not-a-record")))
+            continue
+        o = iri(name + "-c")
+        t.append((s, ex + "c", o))
+        for j, edge in enumerate(child):
+            if edge in ("x", "badx"):
+                dd = iri(f"{name}-d{j}")
+                t += [(o, ex + "x", dd), (dd, ex + "dn", lit(str(j)) if
+                      edge == "x" else lit(str(j), dt=XSD_INTEGER))]
+            elif edge == "tag":
+                t.append((o, ex + "tag", lit("t")))
+            elif edge == "badtag":
+                t.append((o, ex + "tag", iri("not-a-literal")))
+            else:
+                t.append((o, ex + "name", lit("n")))
+    subjects = bundles(t, [iri(n) for n in ("good", "twox", "badd", "badtag",
+                                            "notag", "bare", "lit")])
+    want = assert_error_parity(spark, b.catalog, root, subjects)
+    assert {n: c for n, c in want.items() if isinstance(c, int)} == {
+        "twox": 204, "badd": 223, "badtag": 221, "notag": 219, "bare": 203,
+        "lit": 205}

@@ -10,9 +10,9 @@ import json
 
 import pytest
 
+from fastparity import assert_error_parity
 from ramp_shapes_spark.dataset import triples_df
-from ramp_shapes_spark.fasterrors import error_capable
-from ramp_shapes_spark.fastframe import qualifies
+from ramp_shapes_spark.fastframe import error_capable, qualifies
 from ramp_shapes_spark.frame import FrameEngine
 from ramp_shapes_spark.pyframe import RampError, frame_py
 from ramp_shapes_spark.shapes import (
@@ -71,6 +71,8 @@ def _bounded_subjects(anyleaf):
         subjects["twov"] = subj("twov", [lit("a")],
                                 vs=(lit("x"), lit("7", dt=XSD_INTEGER)))
         subjects["nov"] = subj("nov", [lit("a")], vs=())
+        # fails every variant: reported with the first variant's code
+        subjects["iriv"] = subj("iriv", [lit("a")], vs=(iri("y"),))
     return subjects
 
 
@@ -284,3 +286,50 @@ def test_mapref_null_part_emits_null_value(spark):
     assert fast == general
     assert general[("iri", "s1", None, None)]["entries"] == \
         {"alpha": "", "beta": "en"}
+
+
+@pytest.mark.parametrize("value_ref", [False, True], ids=["map", "mapref"])
+def test_map_error_parity(spark, value_ref):
+    """A map whose item fails to frame fails the whole map with the
+    item's own code (frame.ts:664-690); the fast error channel reports
+    the reference's first error for every failing subject, for plain
+    and value-reference maps."""
+    b = ShapeBuilder()
+    key_shape = b.literal(datatype=XSD_STRING)
+    val_shape = b.literal()
+    entry = b.record(EX + "E", properties=[
+        prop("k", EX + "key", key_shape),
+        prop("v", EX + "val", val_shape),
+    ])
+    m = b.map_of(ShapeReference(target=key_shape, part="value"), entry,
+                 value=(ShapeReference(target=val_shape, part="value")
+                        if value_ref else None))
+    root = b.record(EX + "T", type_properties=_anchor_props(b), properties=[
+        prop("id", EX + "id", b.literal(datatype=XSD_STRING)),
+        prop("entries", EX + "entry", m),
+    ])
+
+    def subj(name, entries):
+        s = iri(name)
+        out = [(s, RDF_TYPE, iri(EX + "T")), (s, EX + "id", lit(name))]
+        for j, (keys, vals) in enumerate(entries):
+            e = iri(f"{name}-e{j}")
+            out.append((s, EX + "entry", e))
+            out += [(e, EX + "key", k) for k in keys]
+            out += [(e, EX + "val", v) for v in vals]
+        return out
+
+    subjects = {
+        "good": subj("good", [([lit("alpha")], [lit("x")]),
+                              ([lit("beta")], [lit("y")])]),
+        "empty": subj("empty", []),
+        "nokey": subj("nokey", [([], [lit("x")])]),
+        "twokeys": subj("twokeys", [([lit("a"), lit("b")], [lit("x")])]),
+        "badkey": subj("badkey", [([lit("7", dt=XSD_INTEGER)], [lit("x")])]),
+        "noval": subj("noval", [([lit("a")], [])]),
+        "mixed": subj("mixed", [([lit("a")], [lit("x")]),
+                                ([lit("b")], [iri("notalit")])]),
+    }
+    want = assert_error_parity(spark, b.catalog, root, subjects)
+    assert sorted(c for c in want.values() if isinstance(c, int)) == \
+        [203, 203, 204, 221, 223]

@@ -5,19 +5,22 @@
 error-channel compiler is the reference-parity implementation
 (golden-tested), so the fast path must produce the identical match
 set on every cardinality corner: absent edge, one matching child, one
-MISmatching child (optional absorbs it), two matching children
-(exactly-one violation), and a matching+mismatching pair.
+MISmatching child (it fails the property), two matching children
+(exactly-one violation), and a matching+mismatching pair.  With the
+error channel on, each failing subject's code must equal the reference
+interpreter's first error.
 """
 
 import json
 
 import pytest
+from fastparity import assert_error_parity, bundles
 
 from ramp_shapes_spark.dataset import triples_df
 from ramp_shapes_spark.fastframe import qualifies
 from ramp_shapes_spark.frame import FrameEngine
 from ramp_shapes_spark.shapes import ShapeBuilder, prop
-from ramp_shapes_spark.terms import RDF_TYPE, XSD_STRING, iri, lit
+from ramp_shapes_spark.terms import RDF_TYPE, XSD_INTEGER, XSD_STRING, iri, lit
 
 EX = "http://example.com/optrec#"
 
@@ -45,7 +48,7 @@ def _shapes(empty_is_null=False):
 
 def _graph():
     t = []
-    for n in ("p0", "p1", "p2", "p3", "p4"):
+    for n in ("p0", "p1", "p2", "p3", "p4", "p5", "p6"):
         t.append((iri(n), RDF_TYPE, iri(EX + "Parent")))
         t.append((iri(n), EX + "pid", lit(n)))
     # p0: no child edge
@@ -65,6 +68,11 @@ def _graph():
     t.append((iri("p4"), EX + "child", iri("c4x")))
     t.append((iri("c4"), EX + "name", lit("four")))
     t.append((iri("c4x"), EX + "other", lit("x")))
+    # p5: one child whose name has the wrong datatype
+    t.append((iri("p5"), EX + "child", iri("c5")))
+    t.append((iri("c5"), EX + "name", lit("5", dt=XSD_INTEGER)))
+    # p6: the child is a literal, never a record
+    t.append((iri("p6"), EX + "child", lit("c6")))
     return t
 
 
@@ -95,3 +103,16 @@ def test_optrec_fast_matches_general(spark, empty_is_null):
         f"fast/general divergence:\n  fast    {json.dumps(fast, sort_keys=True)}"
         f"\n  general {json.dumps(general, sort_keys=True)}"
     )
+
+
+@pytest.mark.parametrize("empty_is_null", [False, True])
+def test_optrec_error_parity(spark, empty_is_null):
+    """The fast error channel's code for each failing subject equals the
+    reference's first error: a mismatching child bubbles its own code
+    (203, 223; 205 for a literal), two matching children fail
+    exactly-one (204)."""
+    b, parent = _shapes(empty_is_null)
+    subjects = bundles(_graph(), [iri(f"p{k}") for k in range(7)])
+    want = assert_error_parity(spark, b.catalog, parent, subjects)
+    assert {n: c for n, c in want.items() if isinstance(c, int)} == \
+        {"p2": 203, "p3": 204, "p4": 203, "p5": 223, "p6": 205}

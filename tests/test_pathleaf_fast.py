@@ -6,6 +6,7 @@ error-channel compiler's match set exactly."""
 import json
 
 import pytest
+from fastparity import assert_error_parity, bundles
 
 from ramp_shapes_spark.dataset import triples_df
 from ramp_shapes_spark.fastframe import qualifies
@@ -20,7 +21,7 @@ EX = "http://example.com/pl#"
 
 def _graph():
     t = []
-    for n in ("p0", "p1", "p2", "p3", "p4"):
+    for n in ("p0", "p1", "p2", "p3", "p4", "p5"):
         t.append((iri(n), RDF_TYPE, iri(EX + "Parent")))
         t.append((iri(n), EX + "pid", lit(n)))
     # p1: one value through a->b
@@ -41,6 +42,9 @@ def _graph():
     t.append((iri("p4"), EX + "a", iri("m4x")))
     t.append((iri("m4"), EX + "b", lit("v4")))
     t.append((iri("m4x"), EX + "b", lit("v4")))
+    # p5: the one reached value is an IRI, not a string literal
+    t.append((iri("p5"), EX + "a", iri("m5")))
+    t.append((iri("m5"), EX + "b", iri("v5")))
     # zeroOrOne link targets (IRIs)
     t.append((iri("p1"), EX + "link", iri("q1")))
     return t
@@ -127,3 +131,62 @@ def test_zero_or_one_self_parity(spark):
     # sanity on the semantics themselves: p1 has self + q1 -> fails;
     # p0/p2/p3 resolve to themselves
     assert "p1" not in fast and "p0" in fast
+
+
+@pytest.mark.parametrize("kind", ["plain", "optional", "zero_or_one"])
+def test_pathleaf_error_parity(spark, kind):
+    """The fast error channel's code for each failing subject equals the
+    reference's first error: no reached value (203), two reached values
+    or self plus link (204), a reached value failing the leaf (221)."""
+    b = ShapeBuilder()
+    root = _zoo_shape(b) if kind == "zero_or_one" else \
+        _seq_shape(b, kind == "optional")
+    subjects = bundles(_graph(), [iri(f"p{k}") for k in range(6)])
+    want = assert_error_parity(spark, b.catalog, root, subjects)
+    codes = {n: c for n, c in want.items() if isinstance(c, int)}
+    assert codes == {
+        "plain": {"p0": 203, "p2": 204, "p3": 203, "p5": 221},
+        "optional": {"p2": 204, "p5": 221},
+        "zero_or_one": {"p1": 204},
+    }[kind]
+
+
+@pytest.mark.parametrize("composite", [True, False], ids=["path", "pred"])
+@pytest.mark.parametrize("optional", [False, True])
+def test_lenient_leaf_error_parity(spark, composite, optional):
+    """A lenient leaf skips its mismatching candidates: the property
+    fails only for zero (plain) or two or more matching candidates, and
+    reports 203/204 like the reference — never a skipped candidate's
+    own code.  Both the composite-path plan and the scalar base."""
+    b = ShapeBuilder()
+    leaf = b.literal(datatype=XSD_STRING, lenient=True)
+    path = SequencePath((PredicatePath(EX + "a"), PredicatePath(EX + "b"))) \
+        if composite else PredicatePath(EX + "b")
+    root = b.record(
+        EX + "Parent",
+        type_properties=[prop("t", RDF_TYPE,
+                              b.constant(iri(EX + "Parent")),
+                              transient=True)],
+        properties=[
+            prop("id", EX + "pid", b.literal(datatype=XSD_STRING)),
+            prop("v", path, b.optional(leaf) if optional else leaf),
+        ],
+    )
+    t = []
+    for name, vals in (("onebad", [iri("x")]),
+                       ("goodbad", [lit("g"), iri("x")]),
+                       ("twogood", [lit("g"), lit("h")]),
+                       ("twogoodbad", [lit("g"), lit("h"), iri("x")])):
+        t += [(iri(name), RDF_TYPE, iri(EX + "Parent")),
+              (iri(name), EX + "pid", lit(name))]
+        for j, v in enumerate(vals):
+            mid = iri(f"{name}-m{j}") if composite else iri(name)
+            if composite:
+                t.append((iri(name), EX + "a", mid))
+            t.append((mid, EX + "b", v))
+    subjects = bundles(t, [iri(n) for n in
+                           ("onebad", "goodbad", "twogood", "twogoodbad")])
+    want = assert_error_parity(spark, b.catalog, root, subjects)
+    codes = {n: c for n, c in want.items() if isinstance(c, int)}
+    assert codes == {"twogood": 204, "twogoodbad": 204,
+                     **({} if optional else {"onebad": 203})}
